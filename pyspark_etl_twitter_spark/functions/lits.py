@@ -1,13 +1,24 @@
-"""Literal-array constructors that cross the py4j boundary ONCE.
+"""Driver-built data crosses py4j ONCE — one rule for each shape:
+
+- a TABLE (weights, centroids, probe lists, store ``meta/`` rows, band
+  dims, bitmaps) goes through ``local_table``: a ``pyarrow.Table`` handed
+  to ``createDataFrame`` plans as a ``LocalRelation`` under every session
+  shape (Arrow conf on or off, 0 rows included), so no job touching it
+  pays a Python-worker round trip — unlike a list or pandas input, which
+  becomes a Python-RDD ``LogicalRDD`` (always for lists; for pandas when
+  Arrow is off), and unlike a ``range(n)`` + ``element_at(lit_*)`` plan,
+  whose literal count grows the expression tree with the data;
+- an ARRAY used inside an expression (LUTs, masks, argmax folds) goes
+  through ``lit_*``.
 
 The ``F.array(*[F.lit(x) for x in vals])`` idiom performs 2·n+1 py4j
 round trips — measured ~2.8 s of pure driver time for a 4,096-double
 array, and the KNN/ANN family builds several such arrays per query
-CONSTRUCTION (LUTs, codebooks, centroid tables), so plan construction
-dominated those rows' bench time (r16 profile: 27 s construction vs 3 s
-of jobs on ``knn_ivfpq``). Rendering the same values into ONE SQL
-``array(...)`` expression string and parsing it JVM-side is ~11× faster
-(0.26-0.32 s for the same 4,096 doubles) and bit-identical:
+CONSTRUCTION, so plan construction dominated those rows' bench time
+(27 s construction vs 3 s of jobs on ``knn_ivfpq``). Rendering the same
+values into ONE SQL ``array(...)`` expression string and parsing it
+JVM-side is ~11× faster (0.26-0.32 s for the same 4,096 doubles) and
+bit-identical:
 
 - doubles ride as ``repr(v)`` + ``D``. ``repr`` emits the shortest
   string that round-trips the IEEE-754 value, and Java's
@@ -20,18 +31,35 @@ of jobs on ``knn_ivfpq``). Rendering the same values into ONE SQL
 The analyzed expression is the same ``CreateArray(Literal...)`` tree
 either way — only the construction path changes, never the values or
 the result schema. Empty arrays are rejected: SQL ``array()`` types as
-``array<string>``, unlike a typed empty F.array — callers special-case
-empty inputs themselves.
+``array<string>``, unlike a typed empty F.array — an empty TABLE is fine
+(``local_table`` types its columns from the schema).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Sequence
+from collections.abc import Iterable, Mapping, Sequence
 
-from pyspark.sql import Column
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 _I32_MIN, _I32_MAX = -(2**31), 2**31 - 1
+
+
+def local_table(
+    spark: SparkSession, schema: str | StructType, data: Mapping | pa.Table
+) -> DataFrame:
+    """A driver-built table as a ``LocalRelation`` leaf.
+
+    ``schema`` is Spark DDL or a ``StructType``; ``data`` maps each column
+    name, in schema order, to its values (any sequence or numpy array), or
+    is a ``pyarrow.Table``. Values cast to the schema exactly (doubles
+    bit-for-bit, NaN/±Inf/−0.0 included); a value that does not fit its
+    column's type raises ``ValueError``."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    return spark.createDataFrame(pa.table(data), schema)
 
 
 def _d(v: float) -> str:

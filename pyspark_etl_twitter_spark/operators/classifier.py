@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pyspark_etl_twitter_spark.functions.lits import lit_doubles
+from pyspark_etl_twitter_spark.functions.lits import lit_doubles, local_table
 
 from pyspark_etl_twitter_spark.operators.encoding import hashed_term_features
 
@@ -107,13 +107,8 @@ def lr_train_portable(
         grad = feats.join(err, "doc_id").groupBy("bucket").agg(
             (F.sum(F.col("e") * F.col("val")) / F.lit(n)).alias("g")
         )
-        # range+literals, not createDataFrame: a Python-RDD-backed local
-        # relation adds a Python-worker round trip to the update job on
-        # every iteration (see similarity.ivf_assignments._centroid_table)
-        _w_lit = lit_doubles(w)
-        w_df = spark.range(dim + 1).select(
-            F.col("id").alias("bucket"),
-            F.element_at(_w_lit, (F.col("id") + 1).cast("int")).alias("w"),
+        w_df = local_table(
+            spark, "bucket bigint, w double", {"bucket": range(dim + 1), "w": w}
         )
         upd = (
             w_df.join(grad, "bucket", "left")

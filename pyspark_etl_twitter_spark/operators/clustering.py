@@ -22,10 +22,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pyspark_etl_twitter_spark.functions.lits import (
-    lit_doubles_2d,
-    lit_ints,
-)
+from pyspark_etl_twitter_spark.functions.lits import lit_doubles_2d, local_table
 
 
 def _assign(emb: DataFrame, centroids: list[list[float]], id_col: str, vec_col: str) -> DataFrame:
@@ -323,16 +320,10 @@ def kmeans_assign_two_level(
     )
 
     spark = emb.sparkSession
-    # range+literals, not createDataFrame: a Python-RDD-backed broadcast
-    # side adds a Python-worker round trip to every assignment job (see
-    # similarity.ivf_assignments._centroid_table)
-    _grp_lit = lit_ints([groups[j] for j in range(k)])
-    _c_lit = lit_doubles_2d([centroids[j] for j in range(k)])
-    _pos = (F.col("id") + 1).cast("int")
-    child = spark.range(k).select(
-        F.element_at(_grp_lit, _pos).cast("int").alias("_grp"),
-        F.col("id").cast("int").alias("cluster"),
-        F.element_at(_c_lit, _pos).alias("_c"),
+    child = local_table(
+        spark,
+        "_grp int, cluster int, _c array<double>",
+        {"_grp": groups, "cluster": range(k), "_c": centroids},
     )
     pairs = probed.join(F.broadcast(child), "_grp")
     d2 = F.aggregate(
@@ -388,11 +379,10 @@ def kmeans_assign_join(
     argmin of the literal path) → bit-identical assignments; pinned by
     ``test_kmeans_assign_join_matches_literal``."""
     spark = emb.sparkSession
-    # range+literals, not createDataFrame — see kmeans_assign_two_level
-    _c_lit = lit_doubles_2d(centroids)
-    cent_df = spark.range(len(centroids)).select(
-        F.col("id").cast("int").alias("cluster"),
-        F.element_at(_c_lit, (F.col("id") + 1).cast("int")).alias("_c"),
+    cent_df = local_table(
+        spark,
+        "cluster int, _c array<double>",
+        {"cluster": range(len(centroids)), "_c": centroids},
     )
     pairs = emb.select(id_col, vec_col).crossJoin(F.broadcast(cent_df))
     d2 = F.aggregate(

@@ -38,6 +38,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from pyspark_etl_twitter_spark.functions.lits import local_table
 from pyspark_etl_twitter_spark.operators.dedup import shingle_array
 from pyspark_etl_twitter_spark.operators.fanout import fan_out_if_narrow
 from pyspark_etl_twitter_spark.operators.textstats import token_count, ws_tokens
@@ -786,14 +787,7 @@ def bloom_contamination(
     # two's-complement wrap: Spark LongType is signed; bit_get reads the
     # same physical bit either way
     words = [w - (1 << 64) if w >= (1 << 63) else w for w in words]
-    # createDataFrame, NOT range(1)+literals (r15, measured): the bitmap
-    # is DATA-sized (m_bits/64 words — thousands), not parameter-sized;
-    # as a literal array it exploded the expression tree and codegen
-    # (2.9 s -> 13 s warm, 48 s cold at sf0.1). The Python-worker hop a
-    # local-list createDataFrame pays per job is the cheaper side here —
-    # the literal idiom is for SMALL parameter tables (centroids, probe
-    # lists, metas), not bitmaps.
-    bitmap = spark.createDataFrame([(words,)], "bloom_bits: array<bigint>")
+    bitmap = local_table(spark, "bloom_bits array<bigint>", {"bloom_bits": [words]})
 
     grams = fan_out_if_narrow(docs, F.col(id_col)).select(
         F.col(id_col),

@@ -25,6 +25,7 @@ from operator import add
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pyspark_etl_twitter_spark.functions.lits import local_table
 from pyspark_etl_twitter_spark.operators.fanout import fan_out
 
 from pyspark_etl_twitter_spark.operators.sentiment import tokens_column
@@ -553,15 +554,20 @@ def build_minhash_index(
             fut.result()
     sigs.unpersist()
     terms.unpersist()
-    # range(1)+lit, not createDataFrame: a local-list createDataFrame
-    # round-trips through a Python worker (~5 s cold) for one row
-    docs.sparkSession.range(1).select(
-        F.lit(int(num_hashes)).alias("num_hashes"),
-        F.lit(int(bands)).alias("bands"),
-        F.lit(int(shingle_n)).alias("shingle_n"),
-        F.lit(float(threshold)).alias("threshold"),
-        F.lit(int(star_bucket_threshold)).alias("star_bucket_threshold"),
-        F.lit(float(est_slack)).alias("est_slack"),
+    # NOT NULL: the meta/ parquet schema every existing store was written with
+    local_table(
+        docs.sparkSession,
+        "num_hashes int NOT NULL, bands int NOT NULL, shingle_n int NOT NULL,"
+        " threshold double NOT NULL, star_bucket_threshold int NOT NULL,"
+        " est_slack double NOT NULL",
+        {
+            "num_hashes": [num_hashes],
+            "bands": [bands],
+            "shingle_n": [shingle_n],
+            "threshold": [threshold],
+            "star_bucket_threshold": [star_bucket_threshold],
+            "est_slack": [est_slack],
+        },
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
     # a fresh build is orphan-free and duplicate-free by construction:
     # commit the clean marker so probes take the fast path (_mh_is_clean)

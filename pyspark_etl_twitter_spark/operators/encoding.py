@@ -600,7 +600,10 @@ def bpe_train_portable(
             # scans. Values are bit-identical (the checkpoint stores the
             # deterministic argmax row); the distributed contract is
             # intact — only the single (x, y) winner ever leaves the
-            # aggregate, and it stays on the executors.
+            # aggregate, and it stays on the executors. Caveat: the block
+            # is lost with its executor (a localCheckpoint keeps no
+            # lineage) — local mode only; a cluster run needs a reliable
+            # checkpoint to recompute on failure.
             .localCheckpoint()
         )
         words = words.crossJoin(F.broadcast(best)).select(

@@ -227,6 +227,10 @@ def kcore_nodes(
     # were 2.0 s (every=1), 2.0 (2), 4.0 (3), and the uncut window
     # (every=6) blew past a 10-minute kill — per-round checkpoints cost
     # one tiny edge-sized job each and cap every window at one round.
+    # Caveat: localCheckpoint blocks live only in executor storage — an
+    # executor lost after the cut takes them with it and the job fails
+    # (no lineage to recompute from). Safe in local mode; on a cluster
+    # these cuts need recompute-on-failure (a reliable checkpoint).
     e = edges.localCheckpoint(eager=False)
     for r in range(rounds):
         deg = degrees(e)

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
+from pyspark_etl_twitter_spark.functions.lits import local_table
+
 
 def data_quality_report(
     df: DataFrame,
@@ -356,11 +358,10 @@ def benford_profile(
     )
     # zero-fill digits 1..9 per group so sparse groups still compare
     # against the full expectation vector
-    digits = counts.sparkSession.range(1, 10).select(
-        F.col("id").cast("int").alias("digit"),
-        F.element_at(
-            F.array(*[F.lit(p) for p in BENFORD_P]), F.col("id").cast("int")
-        ).alias("exp_p"),
+    digits = local_table(
+        counts.sparkSession,
+        "digit int, exp_p double",
+        {"digit": range(1, 10), "exp_p": BENFORD_P},
     )
     frame = (
         counts.select(*gcols).distinct().crossJoin(F.broadcast(digits))

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from pyspark_etl_twitter_spark.operators.fanout import fan_out
 
+from pyspark_etl_twitter_spark.functions.lits import local_table
 from pyspark_etl_twitter_spark.functions.text import remove_stopwords, tokenize
 
 # Reference model intercept: pre_trained_model/stages/
@@ -263,7 +264,7 @@ def load_mllib_weights(spark, model_path: str):
     """
     import glob
 
-    import pandas as pd
+    import numpy as np
 
     stage_dir = {p.split("/")[-1].split("_")[0]: p
                  for p in glob.glob(f"{model_path}/stages/*")}
@@ -273,16 +274,12 @@ def load_mllib_weights(spark, model_path: str):
     coef = lr["coefficientMatrix"].toArray().ravel()
     intercept = float(lr["interceptVector"].toArray()[0])
 
-    pdf = pd.DataFrame(
-        {
-            "term": vocab,
-            "idx": range(len(vocab)),
-            "idf": idf[: len(vocab)],
-            "coef": coef[: len(vocab)],
-        }
+    nz = np.flatnonzero(coef[: len(vocab)])
+    weights = local_table(
+        spark,
+        "term string, idx bigint, idf double, coef double",
+        {"term": [vocab[i] for i in nz], "idx": nz, "idf": idf[nz], "coef": coef[nz]},
     )
-    pdf = pdf[pdf["coef"] != 0.0]
-    weights = spark.createDataFrame(pdf)
     return weights, intercept
 
 

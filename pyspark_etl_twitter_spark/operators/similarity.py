@@ -33,6 +33,7 @@ from pyspark_etl_twitter_spark.functions.lits import (
     lit_doubles_3d,
     lit_ints,
     lit_longs,
+    local_table,
 )
 
 
@@ -434,33 +435,19 @@ def ivf_assignments(
         l2_norm(F.col(vec_col)).alias("nrm"),
     )
     def _centroid_table(vecs: list[list[float]], emb_type: str) -> DataFrame:
-        # range + literals, NOT createDataFrame: a local-list
-        # createDataFrame is backed by a Python RDD, and EVERY job that
-        # touches it (the centroid write, each probe) pays a Python-
-        # worker round trip — measured 5.5-7 s per write at sf0.1 vs
-        # 0.2-0.7 s for the literal plan (the build_minhash_index meta
-        # lesson, applied to the trained-centroid paths; r15). Values
-        # are bit-identical: the same Python doubles ride in as literals.
-        cent_lit = lit_doubles_2d(vecs)
-        nrm_lit = lit_doubles(
-            math.sqrt(sum(float(x) * float(x) for x in c)) for c in vecs
-        )
-        pos = (F.col("id") + 1).cast("int")
-        return embeddings.sparkSession.range(len(vecs)).select(
-            F.col("id").alias("list_id"),
-            F.element_at(cent_lit, pos).cast(emb_type).alias("c_emb"),
-            F.element_at(nrm_lit, pos).alias("c_nrm"),
-        )
+        nrm = [math.sqrt(sum(float(x) * float(x) for x in c)) for c in vecs]
+        return local_table(
+            embeddings.sparkSession,
+            "list_id bigint, c_emb array<double>, c_nrm double",
+            {"list_id": range(len(vecs)), "c_emb": vecs, "c_nrm": nrm},
+        ).select("list_id", F.col("c_emb").cast(emb_type).alias("c_emb"), "c_nrm")
 
     if centroid_vectors is not None:
         # pre-trained centroids (e.g. kmeans_fit_portable) — kept as
         # DOUBLES, not the float32 cast of the train_iters branch, so a
         # DuckDB oracle carrying the same 6dp-rounded trajectory computes
         # sims from exactly the same values
-        centroids = _centroid_table(
-            [[float(x) for x in c] for c in centroid_vectors],
-            "array<double>",
-        )
+        centroids = _centroid_table(centroid_vectors, "array<double>")
     elif train_iters > 0:
         from pyspark_etl_twitter_spark.operators.clustering import kmeans_fit
 
@@ -471,9 +458,7 @@ def ivf_assignments(
             vec_col=vec_col,
             max_iters=train_iters,
         )
-        centroids = _centroid_table(
-            [[float(x) for x in c] for c in trained], "array<float>"
-        )
+        centroids = _centroid_table(trained, "array<float>")
     else:
         centroids = base.filter(F.col("vec_id") < n_lists).select(
             F.col("vec_id").alias("list_id"),
@@ -568,17 +553,15 @@ def _ivf_assign_two_level(base: DataFrame, crows, n_probe: int) -> DataFrame:
         ).alias("_grp"),
     )
     spark = base.sparkSession
-    # range+literals, not createDataFrame — see ivf_assignments._centroid_table
-    _grp_lit = lit_ints([groups[j] for j in range(k)])
-    _lid_lit = lit_longs([crows[j]["list_id"] for j in range(k)])
-    _c_lit = lit_doubles_2d([crows[j]["c_emb"] for j in range(k)])
-    _cn_lit = lit_doubles(float(crows[j]["c_nrm"]) for j in range(k))
-    _pos = (F.col("id") + 1).cast("int")
-    child = spark.range(k).select(
-        F.element_at(_grp_lit, _pos).cast("int").alias("_grp"),
-        F.element_at(_lid_lit, _pos).cast("long").alias("list_id"),
-        F.element_at(_c_lit, _pos).alias("_c"),
-        F.element_at(_cn_lit, _pos).alias("_cn"),
+    child = local_table(
+        spark,
+        "_grp int, list_id bigint, _c array<double>, _cn double",
+        {
+            "_grp": groups,
+            "list_id": [r["list_id"] for r in crows],
+            "_c": [r["c_emb"] for r in crows],
+            "_cn": [r["c_nrm"] for r in crows],
+        },
     )
     pairs = probed.join(F.broadcast(child), "_grp")
     sim = dot(F.col("emb"), F.col("_c")) / (F.col("nrm") * F.col("_cn"))
@@ -1010,14 +993,16 @@ def build_lsh_index(
         ).coalesce(1).write.mode("overwrite").parquet(f"{path}/queries")
     finally:
         base.unpersist()
-    # range(1)+lit, not createDataFrame: a local-list createDataFrame
-    # round-trips through a Python worker (~5 s cold) for one row
-    embeddings.sparkSession.range(1).select(
-        F.lit(layout).alias("layout"),
-        F.lit(int(n_planes)).alias("n_planes"),
-        F.lit(int(n_tables)).alias("n_tables"),
-        F.lit(int(seed)).alias("seed"),
-        F.lit(bool(quantize)).alias("quantize"),
+    local_table(
+        embeddings.sparkSession,
+        "layout string, n_planes int, n_tables int, seed int, quantize boolean",
+        {
+            "layout": [layout],
+            "n_planes": [n_planes],
+            "n_tables": [n_tables],
+            "seed": [seed],
+            "quantize": [bool(quantize)],
+        },
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
 
 
@@ -2020,26 +2005,15 @@ def _ivfpq_probe_plan(
                 ]
             )
             probe_rows.append((q_id, len(luts) - 1, l))
-    # range+literals, not createDataFrame: this probe table joins the
-    # codes in EVERY probe job, and a Python-RDD-backed local relation
-    # would add a Python-worker round trip to each (see
-    # ivf_assignments._centroid_table)
-    if probe_rows:
-        _qid_lit = lit_longs([q for q, _, _ in probe_rows])
-        _qp_lit = lit_ints([p for _, p, _ in probe_rows])
-        _lid_lit = lit_ints([l for _, _, l in probe_rows])
-        _pos = (F.col("id") + 1).cast("int")
-        probes = spark.range(len(probe_rows)).select(
-            F.element_at(_qid_lit, _pos).cast("long").alias("q_id"),
-            F.element_at(_qp_lit, _pos).cast("int").alias("qp"),
-            F.element_at(_lid_lit, _pos).cast("int").alias("list_id"),
-        )
-    else:  # no queries: an empty literal array cannot type the columns
-        probes = spark.range(0).select(
-            F.col("id").alias("q_id"),
-            F.lit(0).cast("int").alias("qp"),
-            F.lit(0).cast("int").alias("list_id"),
-        )
+    probes = local_table(
+        spark,
+        "q_id bigint, qp int, list_id int",
+        {
+            "q_id": [q for q, _, _ in probe_rows],
+            "qp": [p for _, p, _ in probe_rows],
+            "list_id": [l for _, _, l in probe_rows],
+        },
+    )
     lut_lit = lit_doubles_3d(luts)
     adc = F.aggregate(
         F.sequence(F.lit(0), F.lit(m - 1)),
@@ -2191,16 +2165,18 @@ def build_ivfpq_index(
         "list_id"
     ).parquet(f"{path}/codes")
     spark = embeddings.sparkSession
-    # range(1)+literals, not createDataFrame: the one-row meta write
-    # paid a ~5-7 s Python-worker round trip per build (local-list
-    # createDataFrame is a Python RDD; see ivf_assignments._centroid_table)
-    spark.range(1).select(
-        F.lit(int(n_lists)).cast("int").alias("n_lists"),
-        F.lit(int(m)).cast("int").alias("m"),
-        F.lit(int(ksub)).cast("int").alias("ksub"),
-        F.lit(int(dsub)).cast("int").alias("dsub"),
-        lit_doubles_2d(cents).alias("cents"),
-        lit_doubles_3d(books).alias("books"),
+    local_table(
+        spark,
+        "n_lists int, m int, ksub int, dsub int, cents array<array<double>>,"
+        " books array<array<array<double>>>",
+        {
+            "n_lists": [n_lists],
+            "m": [m],
+            "ksub": [ksub],
+            "dsub": [dsub],
+            "cents": [cents],
+            "books": [books],
+        },
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
     base.filter(F.col("vec_id") < max_queries).select(
         F.col("vec_id").alias("q_id"),
@@ -2751,12 +2727,15 @@ def build_pq_code_table(
     pq_encode(embeddings, books, id_col=id_col, vec_col=vec_col).write.mode(
         "overwrite"
     ).parquet(f"{path}/codes")
-    # range(1)+literals, not createDataFrame — see build_ivfpq_index meta
-    spark.range(1).select(
-        F.lit(int(len(books))).cast("int").alias("m"),
-        F.lit(int(len(books[0]))).cast("int").alias("ksub"),
-        F.lit(int(len(books[0][0]))).cast("int").alias("dsub"),
-        lit_doubles_3d(books).alias("books"),
+    local_table(
+        spark,
+        "m int, ksub int, dsub int, books array<array<array<double>>>",
+        {
+            "m": [len(books)],
+            "ksub": [len(books[0])],
+            "dsub": [len(books[0][0])],
+            "books": [books],
+        },
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
 
 

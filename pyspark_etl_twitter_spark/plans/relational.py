@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pyspark_etl_twitter_spark.functions.lits import local_table
 from pyspark_etl_twitter_spark.session import pin_oracle_confs
 from pyspark_etl_twitter_spark.sources.catalog import load_table, table_disk_bytes
 
@@ -371,15 +372,14 @@ def range_join_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     for small-dim non-equi joins is BroadcastNestedLoopJoin — O(fact × 5)
     comparisons, no shuffle. Never range-join two fact tables directly;
     bucketize first (see asof_purchase_click for the windowed alternative)."""
-    bands = spark.createDataFrame(
-        [
-            ("band0", 0.0, 50_000.0),
-            ("band1", 50_000.0, 100_000.0),
-            ("band2", 100_000.0, 200_000.0),
-            ("band3", 200_000.0, 400_000.0),
-            ("band4", 400_000.0, 1e18),
-        ],
-        ["band", "lo", "hi"],
+    bands = local_table(
+        spark,
+        "band string, lo double, hi double",
+        {
+            "band": ["band0", "band1", "band2", "band3", "band4"],
+            "lo": [0.0, 50_000.0, 100_000.0, 200_000.0, 400_000.0],
+            "hi": [50_000.0, 100_000.0, 200_000.0, 400_000.0, 1e18],
+        },
     )
     orders = _t(spark, sf_dir, "orders")
     return (

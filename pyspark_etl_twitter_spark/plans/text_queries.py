@@ -12,10 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pyspark_etl_twitter_spark.functions.lits import (
-    lit_doubles,
-    lit_doubles_2d,
-)
+from pyspark_etl_twitter_spark.functions.lits import lit_doubles_2d, local_table
 from pyspark_etl_twitter_spark.functions.stopwords import ENGLISH_STOPWORDS
 from pyspark_etl_twitter_spark.operators import dedup as D
 from pyspark_etl_twitter_spark.operators import similarity as S
@@ -2597,12 +2594,8 @@ def quality_lr_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _lr_label(_t(spark, sf_dir, "documents"))
     w = lr_train_portable(docs, dim=_LR_DIM, iters=_LR_ITERS, lr=_LR_RATE)
-    # range+literals, not createDataFrame (the Python-RDD local-relation
-    # cost — see classifier.lr_train_portable's update table)
-    _w_lit = lit_doubles(w)
-    return spark.range(len(w)).select(
-        F.col("id").alias("bucket"),
-        F.element_at(_w_lit, (F.col("id") + 1).cast("int")).alias("weight"),
+    return local_table(
+        spark, "bucket bigint, weight double", {"bucket": range(len(w)), "weight": w}
     )
 
 

@@ -20,6 +20,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _cpus() -> int:
+    """Core count: ``$SPARK_GRAFT_CPUS`` when it is a positive integer
+    (the same value that sizes ``local[...]``), else the host's."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
+    return (int(cpus) if cpus.isdigit() else 0) or os.cpu_count() or 8
+
+
 def get_session(
     app_name: str = "pyspark_etl_twitter_spark",
     master: str | None = None,
@@ -29,20 +36,18 @@ def get_session(
     """Build (or fetch) a SparkSession with engine defaults.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, else ``*``).
-    ``shuffle_partitions`` defaults to the core count — the guide's rule:
-    200 default partitions over-parallelizes local runs and under-
-    parallelizes 100 TB ones; it must track the actual parallelism.
+    ``shuffle_partitions`` defaults to the core count (``_cpus``) — the
+    guide's rule: 200 default partitions over-parallelizes local runs and
+    under-parallelizes 100 TB ones; it must track the actual parallelism.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = os.cpu_count() or 8
 
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or _cpus()))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -102,5 +107,5 @@ def pin_oracle_confs(spark: SparkSession) -> SparkSession:
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
     )
     if spark.conf.get("spark.sql.shuffle.partitions") == "200":
-        spark.conf.set("spark.sql.shuffle.partitions", str(os.cpu_count() or 8))
+        spark.conf.set("spark.sql.shuffle.partitions", str(_cpus()))
     return spark

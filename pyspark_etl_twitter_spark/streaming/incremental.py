@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pyspark_etl_twitter_spark.functions.lits import local_table
+
 
 def incremental_ingest(
     spark: SparkSession,
@@ -207,8 +209,7 @@ def streaming_dsir_score(
     )
 
     stream = spark.readStream.schema(DOCUMENTS_STREAM_SCHEMA).json(src_dir)
-    frozen = dlog.collect()
-    model = spark.createDataFrame(frozen, dlog.schema)
+    model = local_table(spark, dlog.schema, dlog.toArrow())
 
     def score_batch(batch_df: DataFrame, epoch_id: int) -> None:
         scored = dsir_score_with(batch_df, model, n_buckets=n_buckets)
@@ -261,8 +262,8 @@ def streaming_containment_score(
 
     stream = spark.readStream.schema(DOCUMENTS_STREAM_SCHEMA).json(src_dir)
     ev_proj = eval_docs.select("doc_id", "text")
-    frozen = ev_proj.collect()  # eval sets are small by definition
-    model = spark.createDataFrame(frozen, ev_proj.schema)
+    # eval sets are small by definition
+    model = local_table(spark, ev_proj.schema, ev_proj.toArrow())
 
     def score_batch(batch_df: DataFrame, epoch_id: int) -> None:
         scored = containment_contamination(batch_df, model, shingle_n=shingle_n)

@@ -1,10 +1,12 @@
 """Global anti-pattern sweep: EVERY registry query's physical plan is
 checked for the things that kill a 100 TB run — unbatched Python UDF rows
-(BatchEvalPython) anywhere, and unintentional CartesianProduct (a
-non-broadcast cross join shuffles n*m rows). Broadcast cross joins of
-1-row scalar frames / tiny dims are the documented intentional pattern
-(DESIGN.md §3) and appear as BroadcastNestedLoopJoin, which is allowed
-only for the whitelisted queries below."""
+(BatchEvalPython) anywhere, unintentional CartesianProduct (a
+non-broadcast cross join shuffles n*m rows), and Python-RDD scans (a
+driver-built table that sends every job touching it through a Python
+worker; functions/lits.local_table builds such tables). Broadcast cross
+joins of 1-row scalar frames / tiny dims are the documented intentional
+pattern (DESIGN.md §3) and appear as BroadcastNestedLoopJoin, which is
+allowed only for the whitelisted queries below."""
 
 import pytest
 
@@ -132,28 +134,62 @@ SKIP = {
 }
 
 
-@pytest.mark.slow
-def test_no_cartesian_or_python_udf_in_any_registry_plan(spark):
-    failures = []
+def _swept_plans(session, failures):
+    """(name, queryExecution) of every swept registry query built under
+    ``session``; build errors land in ``failures``."""
     for name, fn in QUERIES.items():
         if name in SKIP:
             continue
         try:
-            plan = (
-                fn(spark, SF_TINY)
-                ._jdf.queryExecution()
-                .executedPlan()
-                .toString()
-            )
+            yield name, fn(session, SF_TINY)._jdf.queryExecution()
         except Exception as exc:  # noqa: BLE001
             failures.append(f"{name}: plan build failed: {exc}")
-            continue
+
+
+def _has_python_rdd_leaf(qe) -> bool:
+    """A ``LogicalRDD`` leaf whose lineage is a ``PythonRDD`` — by the
+    lineage, not the node name: localCheckpoint scans are LogicalRDDs
+    too, and legitimate."""
+    plan = qe.analyzed()
+    subs = plan.subqueriesAll()
+    for tree in [plan] + [subs.apply(i) for i in range(subs.size())]:
+        leaves = tree.collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if (
+                leaf.getClass().getSimpleName() == "LogicalRDD"
+                and "PythonRDD" in leaf.rdd().toDebugString()
+            ):
+                return True
+    return False
+
+
+@pytest.mark.slow
+def test_no_cartesian_or_python_udf_in_any_registry_plan(spark):
+    failures = []
+    for name, qe in _swept_plans(spark, failures):
+        plan = qe.executedPlan().toString()
+        if _has_python_rdd_leaf(qe):
+            failures.append(f"{name}: Python-RDD scan in plan")
         if "CartesianProduct" in plan:
             failures.append(f"{name}: CartesianProduct in plan")
         if "BatchEvalPython" in plan:
             failures.append(f"{name}: row-wise Python UDF in plan")
         if "BroadcastNestedLoopJoin" in plan and name not in BNLJ_OK:
             failures.append(f"{name}: unexpected BroadcastNestedLoopJoin")
+    assert not failures, "\n".join(failures)
+
+
+@pytest.mark.slow
+def test_no_python_rdd_scan_under_plain_session(spark):
+    """A plain session has the Arrow conf off (Spark's default) — where a
+    list or pandas createDataFrame input becomes a Python-RDD scan."""
+    plain = spark.newSession()
+    plain.conf.set("spark.sql.execution.arrow.pyspark.enabled", "false")
+    failures = []
+    for name, qe in _swept_plans(plain, failures):
+        if _has_python_rdd_leaf(qe):
+            failures.append(f"{name}: Python-RDD scan in plan")
     assert not failures, "\n".join(failures)
 
 
