@@ -25,7 +25,7 @@ from operator import add
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pyspark_etl_twitter_spark.functions.lits import local_table
+from pyspark_etl_twitter_spark.operators import indexstore
 from pyspark_etl_twitter_spark.operators.fanout import fan_out
 
 from pyspark_etl_twitter_spark.operators.sentiment import tokens_column
@@ -519,56 +519,35 @@ def build_minhash_index(
     # there is no pre-existing committed state to protect), so they run
     # as one 3-concurrent wave (guide §2.6): each write's straggler tail
     # frees cores the next job back-fills — 4 sequential jobs → 1 + wave.
-    from concurrent.futures import ThreadPoolExecutor
-
-    sigs.withColumnRenamed("_id", "doc_id").repartitionByRange(
-        "doc_id"
-    ).sortWithinPartitions("doc_id").write.mode("overwrite").parquet(
-        f"{path}/sigs"
+    t_texts, t_bands, t_sigs, t_terms = indexstore.MINHASH_TABLES
+    indexstore.write(sigs.withColumnRenamed("_id", "doc_id"), path, t_sigs)
+    indexstore.write_wave(
+        lambda: indexstore.write(band_rows, path, t_bands),
+        lambda: indexstore.write(
+            terms.select(F.col("_id").alias("doc_id"), "term"), path, t_terms
+        ),
+        lambda: indexstore.write(
+            docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")),
+            path,
+            t_texts,
+        ),
     )
-
-    def _w_bands() -> None:
-        band_rows.repartitionByRange(
-            "band_id", "band_key"
-        ).sortWithinPartitions("band_id", "band_key").write.mode(
-            "overwrite"
-        ).parquet(f"{path}/bands")
-
-    def _w_terms() -> None:
-        terms.select(
-            F.col("_id").alias("doc_id"), "term"
-        ).repartitionByRange("doc_id").sortWithinPartitions(
-            "doc_id"
-        ).write.mode("overwrite").parquet(f"{path}/terms")
-
-    def _w_texts() -> None:
-        docs.select(
-            F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-        ).repartitionByRange("doc_id").sortWithinPartitions(
-            "doc_id"
-        ).write.mode("overwrite").parquet(f"{path}/texts")
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futures = [pool.submit(fn) for fn in (_w_bands, _w_terms, _w_texts)]
-        for fut in futures:
-            fut.result()
     sigs.unpersist()
     terms.unpersist()
     # NOT NULL: the meta/ parquet schema every existing store was written with
-    local_table(
+    indexstore.write_meta(
         docs.sparkSession,
+        path,
         "num_hashes int NOT NULL, bands int NOT NULL, shingle_n int NOT NULL,"
         " threshold double NOT NULL, star_bucket_threshold int NOT NULL,"
         " est_slack double NOT NULL",
-        {
-            "num_hashes": [num_hashes],
-            "bands": [bands],
-            "shingle_n": [shingle_n],
-            "threshold": [threshold],
-            "star_bucket_threshold": [star_bucket_threshold],
-            "est_slack": [est_slack],
-        },
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+        num_hashes=num_hashes,
+        bands=bands,
+        shingle_n=shingle_n,
+        threshold=threshold,
+        star_bucket_threshold=star_bucket_threshold,
+        est_slack=est_slack,
+    )
     # a fresh build is orphan-free and duplicate-free by construction:
     # commit the clean marker so probes take the fast path (_mh_is_clean)
     _mh_set_clean(path)
@@ -576,7 +555,7 @@ def build_minhash_index(
 
 def _mh_marker(path: str) -> str:
     """Path of the store's clean marker (local-fs idiom; see below)."""
-    return f"{path.removeprefix('file://')}/_CLEAN"
+    return f"{indexstore.require_local_path(path)}/_CLEAN"
 
 
 def _mh_is_clean(path: str) -> bool:
@@ -619,6 +598,51 @@ def _mh_clear_clean(path: str) -> None:
         os.unlink(_mh_marker(path))
     except FileNotFoundError:
         pass
+
+
+def _mh_guard(
+    df: DataFrame, committed: DataFrame | None, dedup_cols: list[str] | None = None
+) -> DataFrame:
+    """Read guard for a DIRTY store; ``committed`` holds its texts/ ids
+    (None: a clean store, read as is). texts/ is the commit surface, so
+    the left-semi against the committed ids removes every orphan — rows
+    of a batch whose texts/ commit never landed, which would otherwise
+    act as indexed partners and drop new docs against a text-less ghost;
+    ``dropDuplicates`` removes rows a replayed epoch re-wrote."""
+    if committed is None:
+        return df
+    return df.dropDuplicates(dedup_cols).join(committed, "doc_id", "left_semi")
+
+
+def _mh_begin_rewrite(spark: SparkSession, path: str) -> DataFrame | None:
+    """Start a compaction or rebuild: clear the clean marker and return
+    the committed ids of a dirty store, checkpointed before any table is
+    overwritten (None for a clean store)."""
+    clean = _mh_is_clean(path)
+    _mh_clear_clean(path)
+    if clean:
+        return None
+    return (
+        spark.read.parquet(f"{path}/texts")
+        .select("doc_id")
+        .distinct()
+        .localCheckpoint()
+    )
+
+
+def _mh_rewrite_edit(committed: DataFrame | None, dropped: DataFrame | None = None):
+    """Per-table edit of a MinHash rewrite: a dirty store loses its
+    duplicate rows and its rows beyond the commit surface (texts/ is that
+    surface), then the ``dropped`` docs go."""
+
+    def edit(table: indexstore.Table, df: DataFrame) -> DataFrame:
+        if committed is not None:
+            df = df.dropDuplicates() if table.name == "texts" else _mh_guard(df, committed)
+        if dropped is not None:
+            df = df.join(dropped, "doc_id", "left_anti")
+        return df
+
+    return edit
 
 
 def minhash_index_append(
@@ -693,17 +717,16 @@ def minhash_index_append(
     already in the index are dropped up front (the candidate join's
     strict ``id < id`` would otherwise never pair a doc with its own
     replayed copy), and same-text/new-id copies verify at J=1.0."""
-    meta = spark.read.parquet(f"{path}/meta").collect()[0]
-    md = meta.asDict()
-    if "est_slack" not in md:
+    meta = indexstore.read_meta(spark, path, builder="build_minhash_index")
+    if "est_slack" not in meta:
         raise ValueError(
             f"MinHash store at {path} was written by an older engine "
             "version (meta lacks est_slack; sigs/ and terms/ may be "
             "absent) — rebuild it with build_minhash_index before probing"
         )
-    nh, nb, sh = meta.num_hashes, meta.bands, meta.shingle_n
-    thr, star = meta.threshold, meta.star_bucket_threshold
-    slack = meta.est_slack
+    nh, nb, sh = meta["num_hashes"], meta["bands"], meta["shingle_n"]
+    thr, star = meta["threshold"], meta["star_bucket_threshold"]
+    slack = meta["est_slack"]
     from pyspark.sql import Window
 
     # clean-store fast path (r14 verdict ask #7): on a store whose clean
@@ -723,28 +746,13 @@ def minhash_index_append(
     # sized), and band rows are a projection of them
     new_sigs = _portable_sigs_from_terms(new_terms, nh).localCheckpoint()
     new_bands = _bands_from_sigs(new_sigs, nh, nb)
-
-    def _guard(stored_df: DataFrame, dedup_cols: list[str]) -> DataFrame:
-        # dirty-store torn-append guards, texts/ is the commit surface
-        # (r13 advice + r14 ADVICE medium): the left-semi against the
-        # committed ids removes EVERY orphan — rows of a batch whose
-        # texts/ commit never landed — whether the current batch is that
-        # batch's replay (the old batch-id anti-join's only case) or a
-        # DIFFERENT later batch (where an orphan would otherwise act as
-        # an indexed partner and drop a new doc against a text-less
-        # ghost, losing the content on both sides); full-row
-        # dropDuplicates neutralizes rows a replayed epoch re-wrote after
-        # its crash left orphans. Committed ids never collide with batch
-        # ids (new_docs is anti-joined against them above), so this
-        # subsumes the old anti-join.
-        if clean:
-            return stored_df
-        return stored_df.dropDuplicates(dedup_cols).join(
-            committed_ids, "doc_id", "left_semi"
-        )
-
-    stored = _guard(
-        spark.read.parquet(f"{path}/bands"), ["doc_id", "band_id", "band_key"]
+    # committed ids never collide with batch ids (new_docs is anti-joined
+    # against them above), so the guard also drops a replay's orphans
+    guard_ids = None if clean else committed_ids
+    stored = _mh_guard(
+        spark.read.parquet(f"{path}/bands"),
+        guard_ids,
+        ["doc_id", "band_id", "band_key"],
     )
     keys = new_bands.select("band_id", "band_key").distinct()
     touched = stored.join(keys, ["band_id", "band_key"], "left_semi")
@@ -790,7 +798,7 @@ def minhash_index_append(
     # signature-estimate prefilter BEFORE any term fetch: batch sigs are
     # in hand, partner sigs come from the store (guarded only when dirty)
     sig_union = new_sigs.withColumnRenamed("_id", "doc_id").unionByName(
-        _guard(spark.read.parquet(f"{path}/sigs"), ["doc_id"])
+        _mh_guard(spark.read.parquet(f"{path}/sigs"), guard_ids, ["doc_id"])
     )
     sa_sig = sig_union.select(
         F.col("doc_id").alias("doc_a"),
@@ -819,8 +827,9 @@ def minhash_index_append(
     # re-tokenizes indexed docs; checkpoint the (batch + collisions)-
     # bounded relation so verify's three uses (sizes + both join sides)
     # read it instead of re-running the scans
-    old_terms = _guard(
+    old_terms = _mh_guard(
         spark.read.parquet(f"{path}/terms").join(cand_ids, "doc_id", "left_semi"),
+        guard_ids,
         ["doc_id", "term"],
     ).select(F.col("doc_id").alias("_id"), "term")
     terms = new_terms.unionByName(old_terms).localCheckpoint()
@@ -857,33 +866,23 @@ def minhash_index_append(
     # run as three CONCURRENT jobs (guide §2.6: each write's tail leaves
     # cores idle that the next job back-fills) — the r14 verdict's
     # per-batch-constant ask: four sequential store-IO jobs → one
-    # 3-concurrent wave + the texts commit.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _append_bands() -> None:
-        new_bands.join(surv_ids, "_id", "left_semi").select(
-            F.col("_id").alias("doc_id"), "band_id", "band_key"
-        ).write.mode("append").parquet(f"{path}/bands")
-
-    def _append_sigs() -> None:
-        new_sigs.join(surv_ids, "_id", "left_semi").withColumnRenamed(
-            "_id", "doc_id"
-        ).write.mode("append").parquet(f"{path}/sigs")
-
-    def _append_terms() -> None:
-        # survivors are batch docs, so their term rows all sit in the
-        # checkpointed verify relation (new_terms ⊆ terms; indexed ids
-        # are never survivors)
-        terms.join(surv_ids, "_id", "left_semi").select(
-            F.col("_id").alias("doc_id"), "term"
-        ).write.mode("append").parquet(f"{path}/terms")
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futures = [
-            pool.submit(fn) for fn in (_append_bands, _append_sigs, _append_terms)
-        ]
-        for fut in futures:
-            fut.result()  # propagate the first failure, after all settle
+    # 3-concurrent wave + the texts commit. Survivors are batch docs, so
+    # their term rows all sit in the checkpointed verify relation
+    # (new_terms ⊆ terms; indexed ids are never survivors).
+    indexstore.write_wave(
+        lambda: new_bands.join(surv_ids, "_id", "left_semi")
+        .select(F.col("_id").alias("doc_id"), "band_id", "band_key")
+        .write.mode("append")
+        .parquet(f"{path}/bands"),
+        lambda: new_sigs.join(surv_ids, "_id", "left_semi")
+        .withColumnRenamed("_id", "doc_id")
+        .write.mode("append")
+        .parquet(f"{path}/sigs"),
+        lambda: terms.join(surv_ids, "_id", "left_semi")
+        .select(F.col("_id").alias("doc_id"), "term")
+        .write.mode("append")
+        .parquet(f"{path}/terms"),
+    )
     survivors.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
     ).write.mode("append").parquet(f"{path}/texts")
@@ -1853,50 +1852,12 @@ def compact_minhash_index(spark: SparkSession, path: str) -> tuple[int, int]:
     leaves only orphan-shaped residue (rows beyond the commit surface),
     never committed ids with missing rows. Single-writer by contract.
     Returns (files_before, files_after) over all tables."""
-    import os
-
-    tables = {
-        "texts": ["doc_id"],
-        "bands": ["band_id", "band_key"],
-        "sigs": ["doc_id"],
-        "terms": ["doc_id"],
-    }
-
-    def _count_files() -> int:
-        n = 0
-        for sub in tables:
-            root = f"{path.removeprefix('file://')}/{sub}"
-            n += sum(
-                1
-                for _dir, _s, files in os.walk(root)
-                for f in files
-                if f.endswith(".parquet")
-            )
-        return n
-
-    before = _count_files()
-    clean = _mh_is_clean(path)
-    _mh_clear_clean(path)
-    committed = (
-        None
-        if clean
-        else spark.read.parquet(f"{path}/texts")
-        .select("doc_id")
-        .distinct()
-        .localCheckpoint()
+    committed = _mh_begin_rewrite(spark, path)
+    files = indexstore.compact(
+        spark, path, indexstore.MINHASH_TABLES, _mh_rewrite_edit(committed)
     )
-    for sub, sort_cols in tables.items():
-        df = spark.read.parquet(f"{path}/{sub}")
-        if not clean:
-            df = df.dropDuplicates()
-            if sub != "texts":
-                df = df.join(committed, "doc_id", "left_semi")
-        df = df.localCheckpoint()
-        df.repartitionByRange(*sort_cols).sortWithinPartitions(
-            *sort_cols
-        ).write.mode("overwrite").parquet(f"{path}/{sub}")
     _mh_set_clean(path)
-    return before, _count_files()
+    return files
 
 
 def rebuild_minhash_index(spark: SparkSession, path: str) -> DataFrame:
@@ -1926,8 +1887,8 @@ def rebuild_minhash_index(spark: SparkSession, path: str) -> DataFrame:
     portable pair algebra on (corpus ∪ append survivors)."""
     from pyspark.sql import Window
 
-    meta = spark.read.parquet(f"{path}/meta").collect()[0]
-    star, thr = meta.star_bucket_threshold, meta.threshold
+    meta = indexstore.read_meta(spark, path, builder="build_minhash_index")
+    star, thr = meta["star_bucket_threshold"], meta["threshold"]
     # clean-store fast path + dirty-store commit-surface guard (r14
     # verdict ask #7 + ADVICE medium): a rebuild of a DIRTY store must
     # not cluster torn-append orphans — an orphan could otherwise become
@@ -1935,29 +1896,12 @@ def rebuild_minhash_index(spark: SparkSession, path: str) -> DataFrame:
     # committed content in favor of a ghost. Same protocol as the probe
     # path: dirty reads dedup + left-semi against the committed (texts/)
     # ids; clean reads skip both.
-    clean = _mh_is_clean(path)
-    _mh_clear_clean(path)
-    committed = (
-        None
-        if clean
-        else spark.read.parquet(f"{path}/texts")
-        .select("doc_id")
-        .distinct()
-        .localCheckpoint()
+    committed = _mh_begin_rewrite(spark, path)
+    band_rows = _mh_guard(
+        spark.read.parquet(f"{path}/bands"), committed, ["doc_id", "band_id", "band_key"]
     )
-
-    def _guard(df: DataFrame, dedup_cols: list[str]) -> DataFrame:
-        if clean:
-            return df
-        return df.dropDuplicates(dedup_cols).join(
-            committed, "doc_id", "left_semi"
-        )
-
-    band_rows = _guard(
-        spark.read.parquet(f"{path}/bands"), ["doc_id", "band_id", "band_key"]
-    )
-    terms = _guard(
-        spark.read.parquet(f"{path}/terms"), ["doc_id", "term"]
+    terms = _mh_guard(
+        spark.read.parquet(f"{path}/terms"), committed, ["doc_id", "term"]
     ).select(F.col("doc_id").alias("_id"), "term")
     w = Window.partitionBy("band_id", "band_key")
     st = band_rows.withColumn("_bsz", F.count(F.lit(1)).over(w)).withColumn(
@@ -1982,28 +1926,12 @@ def rebuild_minhash_index(spark: SparkSession, path: str) -> DataFrame:
         .select("doc_id")
         .localCheckpoint()
     )
-    # texts/ first: a crash mid-rewrite then leaves only orphan-shaped
-    # residue in the other tables (rows beyond the new commit surface),
-    # which the dirty probe path neutralizes and a re-run rebuild or
-    # compaction physically heals — the old bands-first order could
-    # instead leave a committed text with no band rows, invisible to
-    # every later probe
-    tables = {
-        "texts": ["doc_id"],
-        "bands": ["band_id", "band_key"],
-        "sigs": ["doc_id"],
-        "terms": ["doc_id"],
-    }
-    for sub, sort_cols in tables.items():
-        kept = spark.read.parquet(f"{path}/{sub}")
-        if not clean:
-            kept = kept.dropDuplicates()
-            if sub != "texts":
-                kept = kept.join(committed, "doc_id", "left_semi")
-        kept = kept.join(dropped, "doc_id", "left_anti").localCheckpoint()
-        kept.repartitionByRange(*sort_cols).sortWithinPartitions(
-            *sort_cols
-        ).write.mode("overwrite").parquet(f"{path}/{sub}")
+    # texts/ first (MINHASH_TABLES order): a crash mid-rewrite then leaves
+    # only orphan-shaped residue, which the dirty probe path neutralizes
+    # and a re-run rebuild or compaction physically heals
+    edit = _mh_rewrite_edit(committed, dropped)
+    for table in indexstore.MINHASH_TABLES:
+        indexstore.rewrite(spark, path, table, edit)
     _mh_set_clean(path)
     return spark.read.parquet(f"{path}/texts")
 

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pyspark_etl_twitter_spark.operators import indexstore
+
 
 def compact_write(
     df: DataFrame,
@@ -203,4 +205,4 @@ def backfill_partitions(
         df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
-    spark.catalog.refreshByPath(path)
+    indexstore.refresh(spark, path)

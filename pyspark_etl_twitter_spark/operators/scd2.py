@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pyspark_etl_twitter_spark.operators.indexstore import require_local_path
+
 
 def upsert_latest(
     changelog: DataFrame,
@@ -146,29 +148,10 @@ def snapshot_diff(
 # Single-writer by contract (like one streaming query per sink).
 
 
-def _require_local_path(path: str) -> None:
-    """The snapshot pointer is read/written with local-filesystem APIs
-    (os.path.exists / open / os.replace). On a URI-scheme path
-    (hdfs://, s3a://) os.path.exists is ALWAYS False, so an existing
-    table would silently read as empty and the next merge would reset it
-    to v=0, orphaning committed history — fail loudly instead. A real
-    deployment swaps this pointer for its store's atomic primitive
-    (Delta's commit log, an HDFS atomic rename via the Hadoop FS API)."""
-    scheme = path.split("://", 1)
-    if len(scheme) == 2 and scheme[0] not in ("file",):
-        raise ValueError(
-            f"versioned-snapshot tables are local-filesystem-only "
-            f"(got {path!r}); the _latest pointer uses os.path/os.replace "
-            "atomic-rename semantics that do not exist through a "
-            f"{scheme[0]}:// URI"
-        )
-
-
 def _read_latest_pointer(spark, path: str):
     import os
 
-    _require_local_path(path)
-    ptr = os.path.join(path.removeprefix("file://"), "_latest")
+    ptr = os.path.join(require_local_path(path), "_latest")
     if not os.path.exists(ptr):
         return None, None
     raw = open(ptr).read().split()

@@ -35,6 +35,7 @@ from pyspark_etl_twitter_spark.functions.lits import (
     lit_longs,
     local_table,
 )
+from pyspark_etl_twitter_spark.operators import indexstore
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -709,54 +710,50 @@ def build_ivf_index(
     back with wider probes (measured frontier in the docstring constant
     above); on corpora with real directional clustering the drop set
     converges to exact (the L2 ×50 measurement)."""
-    if coarse_probe == "auto":
-        coarse_probe = (
-            IVF_TWO_LEVEL_AUTO_PROBE
-            if n_lists >= IVF_TWO_LEVEL_AUTO_NLISTS
-            else None
-        )
     assignments, centroids = ivf_assignments(
         embeddings,
         id_col=id_col,
         vec_col=vec_col,
         n_lists=n_lists,
         train_iters=train_iters,
-        coarse_probe=coarse_probe,
+        coarse_probe=_auto_coarse_probe(coarse_probe, n_lists),
     )
-    # persist: the assignment (centroid cross join + argmin window) feeds
-    # both the partitioned write and the query-block write — one compute
-    # pass, not two (see build_lsh_index)
+    _write_ivf_tables(path, assignments, centroids, max_queries)
+
+
+def _auto_coarse_probe(coarse_probe: int | None | str, n_lists: int) -> int | None:
+    """Resolve ``coarse_probe="auto"``: the two-level rung at or above the
+    measured break-even, exact single-level assignment below it."""
+    if coarse_probe != "auto":
+        return coarse_probe
+    return IVF_TWO_LEVEL_AUTO_PROBE if n_lists >= IVF_TWO_LEVEL_AUTO_NLISTS else None
+
+
+def _write_ivf_tables(
+    path: str, assignments: DataFrame, centroids: DataFrame, max_queries: int
+) -> None:
+    """Write the IVF store's three tables. The assignment (centroid cross
+    join + argmin) feeds both the assignments and the query block, so it
+    is cached for one compute pass: the big write runs first and fills
+    the cache, then the two single-file writes run as one wave over warm
+    blocks."""
     assignments = assignments.persist()
     try:
-        # repartition on the partition column: one file per inverted list
-        # instead of one per (writer task × list) — see build_lsh_index.
-        # The big assignments write runs first (it materializes the
-        # cache); the two tiny dependent writes then run as one
-        # concurrent wave over warm blocks (guide §2.6) — each small
-        # single-file write is scheduler-overhead-bound, so overlapping
-        # them halves the fixed tail cost.
-        from concurrent.futures import ThreadPoolExecutor
-
-        assignments.repartition("list_id").write.mode("overwrite").partitionBy(
-            "list_id"
-        ).parquet(f"{path}/assignments")
-
-        def _w_centroids() -> None:
-            centroids.coalesce(1).write.mode("overwrite").parquet(
-                f"{path}/centroids"
-            )
-
-        def _w_queries() -> None:
-            assignments.filter(F.col("vec_id") < max_queries).select(
+        indexstore.write(assignments, path, indexstore.IVF_ASSIGNMENTS)
+        indexstore.write_wave(
+            lambda: centroids.coalesce(1)
+            .write.mode("overwrite")
+            .parquet(f"{path}/centroids"),
+            lambda: assignments.filter(F.col("vec_id") < max_queries)
+            .select(
                 F.col("vec_id").alias("q_id"),
                 F.col("emb").alias("q_emb"),
                 F.col("nrm").alias("q_nrm"),
-            ).coalesce(1).write.mode("overwrite").parquet(f"{path}/queries")
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            futures = [pool.submit(fn) for fn in (_w_centroids, _w_queries)]
-            for fut in futures:
-                fut.result()
+            )
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(f"{path}/queries"),
+        )
     finally:
         assignments.unpersist()
 
@@ -850,40 +847,6 @@ def ivf_probe_indexed(
 LSH_PARTITIONED_MIN_BUCKET = 64
 
 
-def _read_lsh_meta(spark, path: str) -> dict | None:
-    """Index self-description written by ``build_lsh_index``; None when the
-    ``meta`` table does not exist (only the missing-path analysis error is
-    swallowed — a corrupt or unreadable meta must PROPAGATE, not be
-    mistaken for an absent one and silently probed with caller-default
-    parameters)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        row = spark.read.parquet(f"{path}/meta").first()
-        return row.asDict() if row is not None else None
-    except AnalysisException as exc:
-        # structured error class first (stable across Spark versions and
-        # locales — r6 ADVICE); message substrings only as a fallback for
-        # builds whose exceptions carry no condition
-        condition = None
-        for getter in ("getCondition", "getErrorClass"):
-            fn = getattr(exc, getter, None)
-            if callable(fn):
-                try:
-                    condition = fn()
-                except Exception:  # pragma: no cover - defensive
-                    condition = None
-                if condition:
-                    break
-        if condition is not None:
-            if condition == "PATH_NOT_FOUND":
-                return None
-            raise
-        if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
-            return None
-        raise
-
-
 def build_lsh_index(
     embeddings: DataFrame,
     path: str,
@@ -950,22 +913,7 @@ def build_lsh_index(
     # with exactly one int8 factor per pair. Writing quantized q_emb without
     # a stored query-side scale shipped scores off by 1/q_scale (~100×) —
     # ranking survived (constant per query) but any threshold consumer broke.
-    corpus = base
-    if quantize:
-        amax = F.aggregate(
-            F.col("emb"), F.lit(0.0), lambda a, x: F.greatest(a, F.abs(x))
-        )
-        scale = F.when(amax > 0, amax / 127.0).otherwise(F.lit(1.0))
-        corpus = base.withColumn("q_scale", scale).select(
-            "vec_id",
-            F.transform(
-                "emb", lambda x: F.round(x / F.col("q_scale")).cast("tinyint")
-            ).alias("emb"),
-            "nrm",
-            "q_scale",
-            "t",
-            "bucket",
-        )
+    corpus = _lsh_quantize(base) if quantize else base
     try:
         if layout == "auto":
             n_vecs = embeddings.count()
@@ -974,16 +922,9 @@ def build_lsh_index(
                 if n_vecs >= (1 << n_planes) * LSH_PARTITIONED_MIN_BUCKET
                 else "flat"
             )
-        if layout == "partitioned":
-            corpus.repartition("t", "bucket").write.mode("overwrite").partitionBy(
-                "t", "bucket"
-            ).parquet(f"{path}/corpus")
-        elif layout == "flat":
-            corpus.repartitionByRange("t", "bucket").sortWithinPartitions(
-                "t", "bucket"
-            ).write.mode("overwrite").parquet(f"{path}/corpus")
-        else:
+        if layout not in indexstore.LSH_CORPUS:
             raise ValueError(f"layout must be auto|partitioned|flat, got {layout!r}")
+        indexstore.write(corpus, path, indexstore.LSH_CORPUS[layout])
         base.filter(F.col("vec_id") < max_queries).select(
             F.col("vec_id").alias("q_id"),
             F.col("emb").alias("q_emb"),
@@ -993,17 +934,33 @@ def build_lsh_index(
         ).coalesce(1).write.mode("overwrite").parquet(f"{path}/queries")
     finally:
         base.unpersist()
-    local_table(
+    indexstore.write_meta(
         embeddings.sparkSession,
+        path,
         "layout string, n_planes int, n_tables int, seed int, quantize boolean",
-        {
-            "layout": [layout],
-            "n_planes": [n_planes],
-            "n_tables": [n_tables],
-            "seed": [seed],
-            "quantize": [bool(quantize)],
-        },
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+        layout=layout,
+        n_planes=n_planes,
+        n_tables=n_tables,
+        seed=seed,
+        quantize=bool(quantize),
+    )
+
+
+def _lsh_quantize(base: DataFrame) -> DataFrame:
+    """int8 corpus vectors: a symmetric per-vector scale max|x|/127 and
+    tinyint codes (buckets and norms stay those of the full vectors)."""
+    amax = F.aggregate(F.col("emb"), F.lit(0.0), lambda a, x: F.greatest(a, F.abs(x)))
+    scale = F.when(amax > 0, amax / 127.0).otherwise(F.lit(1.0))
+    return base.withColumn("q_scale", scale).select(
+        "vec_id",
+        F.transform(
+            "emb", lambda x: F.round(x / F.col("q_scale")).cast("tinyint")
+        ).alias("emb"),
+        "nrm",
+        "q_scale",
+        "t",
+        "bucket",
+    )
 
 
 def lsh_probe_indexed(
@@ -1026,13 +983,7 @@ def lsh_probe_indexed(
     (the probe joins on the OR-construction ``t``/``q_t`` columns, which a
     pre-meta single-table layout lacks — it would fail mid-plan with an
     AnalysisException, so fail early and say how to fix it)."""
-    meta = _read_lsh_meta(spark, path)
-    if meta is None:
-        raise ValueError(
-            f"LSH index at {path!r} has no meta table — rebuild it with "
-            "build_lsh_index (pre-meta layouts lack the per-table columns "
-            "this probe joins on)"
-        )
+    meta = indexstore.read_meta(spark, path, builder="build_lsh_index")
     n_planes = meta["n_planes"]
     corpus = spark.read.parquet(f"{path}/corpus")
     if meta.get("quantize"):
@@ -1189,12 +1140,7 @@ def ivf_index_append(
     ``ivf_assignments`` exhaustive contract)."""
     centroids = spark.read.parquet(f"{path}/centroids")
     crows = sorted(centroids.collect(), key=lambda r: r["list_id"])
-    if coarse_probe == "auto":
-        coarse_probe = (
-            IVF_TWO_LEVEL_AUTO_PROBE
-            if len(crows) >= IVF_TWO_LEVEL_AUTO_NLISTS
-            else None
-        )
+    coarse_probe = _auto_coarse_probe(coarse_probe, len(crows))
     base = new_embeddings.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).alias("emb"),
@@ -1218,23 +1164,7 @@ def ivf_index_append(
             .filter(F.col("_rk") == 1)
             .select("vec_id", "emb", "nrm", "list_id")
         )
-    # conform to the EXISTING index schema before writing: a batch whose
-    # vector type differs (array<double> vs the index's array<float>)
-    # would otherwise produce mixed-type parquet files that fail
-    # non-deterministically at scan time depending on which file the
-    # reader samples for the merged schema
-    existing = {
-        f.name: f.dataType
-        for f in spark.read.parquet(f"{path}/assignments").schema.fields
-    }
-    assigned = assigned.select(
-        *[F.col(c).cast(existing[c]).alias(c) for c in ("vec_id", "emb", "nrm", "list_id")]
-    )
-    assigned.write.mode("append").partitionBy("list_id").parquet(
-        f"{path}/assignments"
-    )
-    # in-place append also invalidates any cached file listing for the path
-    spark.catalog.refreshByPath(f"{path}/assignments")
+    indexstore.append(spark, assigned, path, indexstore.IVF_ASSIGNMENTS)
 
 
 def lsh_index_append(
@@ -1250,7 +1180,7 @@ def lsh_index_append(
     ``meta`` — bucketing is stateless, so unlike IVF there is no drift and
     no periodic rebuild needed) and append in the index's own layout
     (partitioned dirs or flat sorted files), conformed to the existing
-    schema (see ivf_index_append). An index without a ``meta`` table is
+    schema. An index without a ``meta`` table is
     unsupported — the append casts through the OR-construction ``t``
     column, which a pre-meta layout lacks (it would die with a KeyError
     mid-select; fail early instead). An empty batch is a no-op (nothing
@@ -1258,15 +1188,8 @@ def lsh_index_append(
     NULL-vector first row must not masquerade as an empty batch (silently
     skipping the real rows), and NULL rows in any position must not be
     written as corrupt bucket entries."""
-    meta = _read_lsh_meta(spark, path)
-    if meta is None:
-        raise ValueError(
-            f"LSH index at {path!r} has no meta table — rebuild it with "
-            "build_lsh_index before appending"
-        )
+    meta = indexstore.read_meta(spark, path, builder="build_lsh_index")
     n_planes, n_tables, seed = meta["n_planes"], meta["n_tables"], meta["seed"]
-    layout = meta["layout"]
-    quantize = bool(meta.get("quantize"))
     new_embeddings = new_embeddings.filter(F.col(vec_col).isNotNull())
     probe = new_embeddings.select(vec_col).first()
     if probe is None:
@@ -1276,35 +1199,9 @@ def lsh_index_append(
         _hyperplanes(dim, n_planes, _table_seed(seed, t)) for t in range(n_tables)
     ]
     base = _lsh_base(new_embeddings, planes_by_table, id_col=id_col, vec_col=vec_col)
-    cols = ("vec_id", "emb", "nrm", "t", "bucket")
-    if quantize:
-        amax = F.aggregate(
-            F.col("emb"), F.lit(0.0), lambda a, x: F.greatest(a, F.abs(x))
-        )
-        scale = F.when(amax > 0, amax / 127.0).otherwise(F.lit(1.0))
-        base = base.withColumn("q_scale", scale).withColumn(
-            "emb",
-            F.transform(
-                "emb", lambda x: F.round(x / F.col("q_scale")).cast("tinyint")
-            ),
-        )
-        cols = ("vec_id", "emb", "nrm", "q_scale", "t", "bucket")
-    existing = {
-        f.name: f.dataType
-        for f in spark.read.parquet(f"{path}/corpus").schema.fields
-    }
-    base = base.select(
-        *[F.col(c).cast(existing[c]).alias(c) for c in cols]
-    )
-    if layout == "partitioned":
-        base.write.mode("append").partitionBy("t", "bucket").parquet(
-            f"{path}/corpus"
-        )
-    else:
-        base.sortWithinPartitions("t", "bucket").write.mode("append").parquet(
-            f"{path}/corpus"
-        )
-    spark.catalog.refreshByPath(f"{path}/corpus")
+    if meta.get("quantize"):
+        base = _lsh_quantize(base)
+    indexstore.append(spark, base, path, indexstore.LSH_CORPUS[meta["layout"]])
 
 
 def ann_recall_at_k(approx: DataFrame, exact: DataFrame, *, k: int = 5) -> DataFrame:
@@ -1352,32 +1249,9 @@ def compact_lsh_index(spark, path: str) -> tuple[int, int]:
     the files it is overwriting (lineage to the old files is severed
     before the overwrite starts). Single-writer by contract, like every
     sink in this package. Returns (files_before, files_after)."""
-
-    def _count_files() -> int:
-        import os
-
-        root = f"{path.removeprefix('file://')}/corpus"
-        return sum(
-            1
-            for _dir, _sub, files in os.walk(root)
-            for f in files
-            if f.endswith(".parquet")
-        )
-
-    meta = _read_lsh_meta(spark, path)
+    meta = indexstore.read_meta(spark, path)
     layout = meta["layout"] if meta is not None else "partitioned"
-    before = _count_files()
-    corpus = spark.read.parquet(f"{path}/corpus").localCheckpoint()
-    if layout == "partitioned":
-        corpus.repartition("t", "bucket").write.mode("overwrite").partitionBy(
-            "t", "bucket"
-        ).parquet(f"{path}/corpus")
-    else:
-        corpus.repartitionByRange("t", "bucket").sortWithinPartitions(
-            "t", "bucket"
-        ).write.mode("overwrite").parquet(f"{path}/corpus")
-    spark.catalog.refreshByPath(f"{path}/corpus")
-    return before, _count_files()
+    return indexstore.compact(spark, path, (indexstore.LSH_CORPUS[layout],))
 
 
 def compact_ivf_index(spark, path: str) -> tuple[int, int]:
@@ -1385,25 +1259,7 @@ def compact_ivf_index(spark, path: str) -> tuple[int, int]:
     assignments after ``ivf_index_append`` batches accumulate files —
     one file per inverted list again. Centroids/queries are single-file
     already. Returns (files_before, files_after)."""
-
-    def _count_files() -> int:
-        import os
-
-        root = f"{path.removeprefix('file://')}/assignments"
-        return sum(
-            1
-            for _dir, _sub, files in os.walk(root)
-            for f in files
-            if f.endswith(".parquet")
-        )
-
-    before = _count_files()
-    assignments = spark.read.parquet(f"{path}/assignments").localCheckpoint()
-    assignments.repartition("list_id").write.mode("overwrite").partitionBy(
-        "list_id"
-    ).parquet(f"{path}/assignments")
-    spark.catalog.refreshByPath(f"{path}/assignments")
-    return before, _count_files()
+    return indexstore.compact(spark, path, (indexstore.IVF_ASSIGNMENTS,))
 
 
 def rebalance_ivf_index(
@@ -1434,23 +1290,15 @@ def rebalance_ivf_index(
     registry row uses: after build(old corpus) → append(new batch) →
     rebalance, probing the store must equal the one-shot trained pipeline
     over the UNION (``knn_ivf_rebalanced`` pins it against
-    ``ORACLE_KNN_IVF_TRAINED`` verbatim).
-
-    Rewrite idiom matches ``compact_ivf_index``: localCheckpoint cuts
-    lineage from the directories being overwritten; at deployment scale
-    the same flow writes a versioned directory and flips a pointer."""
+    ``ORACLE_KNN_IVF_TRAINED`` verbatim)."""
+    # checkpointed: the writes below overwrite the table it reads
     stored = (
         spark.read.parquet(f"{path}/assignments")
         .select("vec_id", "emb")
         .localCheckpoint()
     )
     n_lists = spark.read.parquet(f"{path}/centroids").count()
-    if coarse_probe == "auto":
-        coarse_probe = (
-            IVF_TWO_LEVEL_AUTO_PROBE
-            if n_lists >= IVF_TWO_LEVEL_AUTO_NLISTS
-            else None
-        )
+    coarse_probe = _auto_coarse_probe(coarse_probe, n_lists)
     if portable:
         from pyspark_etl_twitter_spark.operators.clustering import (
             kmeans_fit_portable,
@@ -1478,36 +1326,10 @@ def rebalance_ivf_index(
             train_iters=train_iters,
             coarse_probe=coarse_probe,
         )
-    assignments = assignments.persist()
-    try:
-        # big write first (materializes the cache), then the two tiny
-        # dependent writes as one concurrent wave — see build_ivf_index
-        from concurrent.futures import ThreadPoolExecutor
-
-        assignments.repartition("list_id").write.mode("overwrite").partitionBy(
-            "list_id"
-        ).parquet(f"{path}/assignments")
-
-        def _w_centroids() -> None:
-            centroids.coalesce(1).write.mode("overwrite").parquet(
-                f"{path}/centroids"
-            )
-
-        def _w_queries() -> None:
-            assignments.filter(F.col("vec_id") < max_queries).select(
-                F.col("vec_id").alias("q_id"),
-                F.col("emb").alias("q_emb"),
-                F.col("nrm").alias("q_nrm"),
-            ).coalesce(1).write.mode("overwrite").parquet(f"{path}/queries")
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            futures = [pool.submit(fn) for fn in (_w_centroids, _w_queries)]
-            for fut in futures:
-                fut.result()
-    finally:
-        assignments.unpersist()
-    for sub in ("assignments", "centroids", "queries"):
-        spark.catalog.refreshByPath(f"{path}/{sub}")
+    _write_ivf_tables(path, assignments, centroids, max_queries)
+    indexstore.refresh(
+        spark, *(f"{path}/{sub}" for sub in ("assignments", "centroids", "queries"))
+    )
 
 
 def ann_mrr(approx: DataFrame, exact: DataFrame, *, k: int = 5) -> DataFrame:
@@ -2159,25 +1981,19 @@ def build_ivfpq_index(
         raise ValueError(f"corpus has {len(seed_rows)} rows < {seed_n}")
     cents, books, dsub = _ivfpq_model(seed_rows, n_lists, m, ksub)
     encoded = _ivfpq_encode_plan(base, cents, books, m, ksub, dsub)
-    # one file per inverted list, not one per (writer task × list) —
-    # the build_ivf_index layout discipline
-    encoded.repartition("list_id").write.mode("overwrite").partitionBy(
-        "list_id"
-    ).parquet(f"{path}/codes")
-    spark = embeddings.sparkSession
-    local_table(
-        spark,
+    indexstore.write(encoded, path, indexstore.IVFPQ_CODES)
+    indexstore.write_meta(
+        embeddings.sparkSession,
+        path,
         "n_lists int, m int, ksub int, dsub int, cents array<array<double>>,"
         " books array<array<array<double>>>",
-        {
-            "n_lists": [n_lists],
-            "m": [m],
-            "ksub": [ksub],
-            "dsub": [dsub],
-            "cents": [cents],
-            "books": [books],
-        },
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+        n_lists=n_lists,
+        m=m,
+        ksub=ksub,
+        dsub=dsub,
+        cents=cents,
+        books=books,
+    )
     base.filter(F.col("vec_id") < max_queries).select(
         F.col("vec_id").alias("q_id"),
         F.col("_emb").cast("array<double>").alias("q_emb"),
@@ -2200,11 +2016,7 @@ def ivfpq_probe_indexed(
     driver-built LUT arithmetic as the one-shot, so results are
     value-identical to ``ivfpq_topk`` on the indexed corpus (pinned in
     pytest and by the shared ``knn_ivfpq`` oracle)."""
-    meta = spark.read.parquet(f"{path}/meta").first()
-    cents = [[float(x) for x in c] for c in meta["cents"]]
-    books = [
-        [[float(v) for v in entry] for entry in sub] for sub in meta["books"]
-    ]
+    meta = indexstore.read_meta(spark, path, builder="build_ivfpq_index")
     q_rows = sorted(
         (int(r["q_id"]), [float(x) for x in r["q_emb"]])
         for r in spark.read.parquet(f"{path}/queries")
@@ -2217,13 +2029,13 @@ def ivfpq_probe_indexed(
     return _ivfpq_probe_plan(
         spark,
         encoded,
-        cents,
-        books,
+        meta["cents"],
+        meta["books"],
         q_rows,
         n_probe=n_probe,
         k=k,
         round_dp=round_dp,
-        dsub=int(meta["dsub"]),
+        dsub=meta["dsub"],
     )
 
 
@@ -2246,35 +2058,14 @@ def ivfpq_index_append(
     vectors are dropped (unassignable); idempotence comes from the
     caller's checkpoint (streaming) or run discipline (batch), the
     ``ivf_index_append``/``pq_code_table_append`` contract."""
-    meta = spark.read.parquet(f"{path}/meta").first()
-    cents = [[float(x) for x in c] for c in meta["cents"]]
-    books = [
-        [[float(v) for v in entry] for entry in sub] for sub in meta["books"]
-    ]
+    meta = indexstore.read_meta(spark, path, builder="build_ivfpq_index")
     base = new_embeddings.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_emb")
     )
     encoded = _ivfpq_encode_plan(
-        base, cents, books, int(meta["m"]), int(meta["ksub"]), int(meta["dsub"])
+        base, meta["cents"], meta["books"], meta["m"], meta["ksub"], meta["dsub"]
     )
-    # conform to the EXISTING codes schema before writing (mixed-type
-    # parquet guard — the ivf_index_append contract)
-    existing = {
-        f.name: f.dataType
-        for f in spark.read.parquet(f"{path}/codes").schema.fields
-    }
-    encoded = encoded.select(
-        *[
-            F.col(name).cast(dtype).alias(name)
-            for name, dtype in existing.items()
-        ]
-    )
-    encoded.write.mode("append").partitionBy("list_id").parquet(
-        f"{path}/codes"
-    )
-    # in-place append invalidates any cached file listing for the path
-    spark.catalog.refreshByPath(f"{path}/codes")
-
+    indexstore.append(spark, encoded, path, indexstore.IVFPQ_CODES)
 
 
 def pq_train_codebooks(
@@ -2723,25 +2514,20 @@ def build_pq_code_table(
         books = pq_codebooks(
             embeddings, id_col=id_col, vec_col=vec_col, m=m, ksub=ksub
         )
-    spark = embeddings.sparkSession
-    pq_encode(embeddings, books, id_col=id_col, vec_col=vec_col).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/codes")
-    local_table(
-        spark,
+    indexstore.write(
+        pq_encode(embeddings, books, id_col=id_col, vec_col=vec_col),
+        path,
+        indexstore.PQ_CODES,
+    )
+    indexstore.write_meta(
+        embeddings.sparkSession,
+        path,
         "m int, ksub int, dsub int, books array<array<array<double>>>",
-        {
-            "m": [len(books)],
-            "ksub": [len(books[0])],
-            "dsub": [len(books[0][0])],
-            "books": [books],
-        },
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
-
-
-def _read_pq_meta(spark, path: str) -> list[list[list[float]]]:
-    row = spark.read.parquet(f"{path}/meta").first()
-    return [[[float(v) for v in entry] for entry in sub] for sub in row["books"]]
+        m=len(books),
+        ksub=len(books[0]),
+        dsub=len(books[0][0]),
+        books=books,
+    )
 
 
 def pq_code_table_append(
@@ -2756,21 +2542,9 @@ def pq_code_table_append(
     against the FROZEN codebook from its meta. Narrow map + append write;
     idempotence comes from the caller's checkpoint (streaming) or run
     discipline (batch), same contract as ``lsh_index_append``."""
-    books = _read_pq_meta(spark, path)
+    books = indexstore.read_meta(spark, path, builder="build_pq_code_table")["books"]
     encoded = pq_encode(batch, books, id_col=id_col, vec_col=vec_col)
-    # conform to the EXISTING codes schema before writing (the
-    # ivf_index_append contract): a batch whose id type differs (int
-    # vs the table's bigint) would otherwise produce mixed-type parquet
-    # files that fail non-deterministically at scan time depending on
-    # which file the reader samples for the merged schema
-    existing = {
-        f.name: f.dataType
-        for f in spark.read.parquet(f"{path}/codes").schema.fields
-    }
-    encoded = encoded.select(
-        *[F.col(name).cast(dtype).alias(name) for name, dtype in existing.items()]
-    )
-    encoded.write.mode("append").parquet(f"{path}/codes")
+    indexstore.append(spark, encoded, path, indexstore.PQ_CODES)
 
 
 def pq_adc_topk_indexed(
@@ -2792,7 +2566,7 @@ def pq_adc_topk_indexed(
             f"{len(queries)} queries exceeds MAX_PANDAS_QUERIES="
             f"{MAX_PANDAS_QUERIES}"
         )
-    books = _read_pq_meta(spark, path)
+    books = indexstore.read_meta(spark, path, builder="build_pq_code_table")["books"]
     m, ksub, dsub = len(books), len(books[0]), len(books[0][0])
     lut = [
         [

@@ -565,7 +565,7 @@ ORACLES: dict[str, str] = {
 # sanctioned rows-only slot this round; every other slot is
 # oracle-backed) — then the 31 alphabetically-first oracle-backed r11
 # rows. Max staleness after r15 is r11 on the 19 remaining r11 rows.
-ROUND15_WINDOW: list[str] = [
+DRIVER_WINDOW: list[str] = [
     # r10 cohort (19)
     "semdedup_fast_summary",
     "sentiment_classes",
@@ -621,16 +621,16 @@ ROUND15_WINDOW: list[str] = [
     "tpch_q12_latency_priority",
 ]
 
-_win = set(ROUND15_WINDOW)
+_win = set(DRIVER_WINDOW)
 # explicit raise, not assert: a module-level assert is stripped under
 # `python -O`, and a malformed window would then silently corrupt the
 # QUERIES ordering the driver's correctness gate depends on (r9 ADVICE)
-if len(ROUND15_WINDOW) != 50 or len(_win) != 50 or not _win <= set(QUERIES):
+if len(DRIVER_WINDOW) != 50 or len(_win) != 50 or not _win <= set(QUERIES):
     raise ValueError(
-        "window/registry drift: ROUND15_WINDOW must be 50 distinct "
-        f"registry keys (got {len(ROUND15_WINDOW)} entries, "
+        "window/registry drift: DRIVER_WINDOW must be 50 distinct "
+        f"registry keys (got {len(DRIVER_WINDOW)} entries, "
         f"{len(_win)} distinct, unknown={sorted(_win - set(QUERIES))})"
     )
-QUERIES = {k: QUERIES[k] for k in ROUND15_WINDOW} | {
+QUERIES = {k: QUERIES[k] for k in DRIVER_WINDOW} | {
     k: v for k, v in QUERIES.items() if k not in _win
 }

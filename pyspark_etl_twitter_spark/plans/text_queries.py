@@ -3683,6 +3683,7 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     test_similarity_pq.py), so the oracle is unchanged and the hashes
     must not move. SQ8 and RP stay inline (no persisted form: SQ8's
     range pass is one scan, RP is a projection)."""
+    from pyspark_etl_twitter_spark.operators import indexstore
     from pyspark_etl_twitter_spark.operators.similarity import (
         build_ivf_index,
         build_lsh_index,
@@ -3695,7 +3696,7 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     root = recall_report_index_root(spark, sf_dir)
 
-    def _ensure(sentinel: str, builder) -> None:
+    def _ensure(read_sentinel, builder) -> None:
         # index-CACHE semantics — the production shape this scoreboard
         # measures: indexes build once per corpus and are probed
         # repeatedly. Contents are fully deterministic (seeded planes /
@@ -3710,16 +3711,23 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         # in build_probe_split. The sentinel is each layout's
         # LAST-written table, so a crashed partial build always rebuilds.
         try:
-            spark.read.parquet(f"{root}/{sentinel}").first()
+            read_sentinel()
         except Exception:  # noqa: BLE001 — absent/partial: (re)build
             builder()
 
     _ensure(
-        "ivf/queries", lambda: build_ivf_index(emb, f"{root}/ivf", n_lists=16)
+        lambda: spark.read.parquet(f"{root}/ivf/queries").first(),
+        lambda: build_ivf_index(emb, f"{root}/ivf", n_lists=16),
     )
     # engine-default LSH build ≡ ann_lsh_topk
-    _ensure("lsh/meta", lambda: build_lsh_index(emb, f"{root}/lsh"))
-    _ensure("pq/meta", lambda: build_pq_code_table(emb, f"{root}/pq"))
+    _ensure(
+        lambda: indexstore.read_meta(spark, f"{root}/lsh", builder="build_lsh_index"),
+        lambda: build_lsh_index(emb, f"{root}/lsh"),
+    )
+    _ensure(
+        lambda: indexstore.read_meta(spark, f"{root}/pq", builder="build_pq_code_table"),
+        lambda: build_pq_code_table(emb, f"{root}/pq"),
+    )
     q8 = sorted(
         (int(r[0]), [float(x) for x in r[1]])
         for r in emb.filter(F.col("vec_id") < 8)

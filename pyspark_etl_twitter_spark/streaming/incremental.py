@@ -10,6 +10,9 @@ cluster. ``availableNow`` gives that while keeping every streaming
 semantic (source offsets, sink commit log, watermarks) intact; the same
 pipeline code runs resident (``processingTime`` trigger) or scheduled
 (``availableNow``) unchanged.
+
+Every run here goes through ``_run_available_now``: a run that outlives
+its ``timeout_s`` is stopped and raises ``TimeoutError``.
 """
 
 from __future__ import annotations
@@ -21,6 +24,35 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pyspark_etl_twitter_spark.functions.lits import local_table
+
+
+def _run_available_now(
+    stream: DataFrame,
+    checkpoint_dir: str,
+    timeout_s: int,
+    sink: Callable[[DataFrame, int], None] | str,
+) -> None:
+    """One ``availableNow`` run of ``stream`` into ``sink`` (a
+    ``foreachBatch`` function, or a parquet directory) under
+    ``checkpoint_dir``. A run that outlives ``timeout_s`` is stopped
+    before ``TimeoutError`` is raised, so no query of it is still writing
+    when the caller moves on; the checkpoint resumes it next run."""
+    writer = stream.writeStream
+    if callable(sink):
+        writer = writer.foreachBatch(sink)
+    else:
+        writer = writer.format("parquet").option("path", sink)
+    q = (
+        writer.option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(
+            f"availableNow run over {checkpoint_dir!r} did not finish in "
+            f"{timeout_s} s; its query was stopped"
+        )
 
 
 def incremental_ingest(
@@ -48,14 +80,7 @@ def incremental_ingest(
     stream = getattr(reader, source_format)(src_dir)
     if transform is not None:
         stream = transform(stream)
-    q = (
-        stream.writeStream.format("parquet")
-        .option("path", dst_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_s)
+    _run_available_now(stream, checkpoint_dir, timeout_s, dst_dir)
 
 
 EMBEDDINGS_STREAM_SCHEMA = T.StructType(
@@ -92,18 +117,12 @@ def streaming_lsh_ingest(
     ``ivf_index_append`` documents that tradeoff)."""
     from pyspark_etl_twitter_spark.operators.similarity import lsh_index_append
 
-    stream = spark.readStream.schema(EMBEDDINGS_STREAM_SCHEMA).json(src_dir)
-
-    def append_batch(batch_df: DataFrame, _epoch: int) -> None:
-        lsh_index_append(spark, index_path, batch_df)
-
-    q = (
-        stream.writeStream.foreachBatch(append_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_available_now(
+        spark.readStream.schema(EMBEDDINGS_STREAM_SCHEMA).json(src_dir),
+        checkpoint_dir,
+        timeout_s,
+        lambda batch_df, _epoch: lsh_index_append(spark, index_path, batch_df),
     )
-    q.awaitTermination(timeout_s)
 
 
 def streaming_text_index_ingest(
@@ -139,13 +158,7 @@ def streaming_text_index_ingest(
         )
         lsh_index_append(spark, index_path, emb)
 
-    q = (
-        stream.writeStream.foreachBatch(append_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_s)
+    _run_available_now(stream, checkpoint_dir, timeout_s, append_batch)
 
 
 def streaming_minhash_dedup_ingest(
@@ -171,18 +184,12 @@ def streaming_minhash_dedup_ingest(
         DOCUMENTS_STREAM_SCHEMA,
     )
 
-    stream = spark.readStream.schema(DOCUMENTS_STREAM_SCHEMA).json(src_dir)
-
-    def append_batch(batch_df: DataFrame, _epoch: int) -> None:
-        minhash_index_append(spark, index_path, batch_df)
-
-    q = (
-        stream.writeStream.foreachBatch(append_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_available_now(
+        spark.readStream.schema(DOCUMENTS_STREAM_SCHEMA).json(src_dir),
+        checkpoint_dir,
+        timeout_s,
+        lambda batch_df, _epoch: minhash_index_append(spark, index_path, batch_df),
     )
-    q.awaitTermination(timeout_s)
 
 
 def streaming_dsir_score(
@@ -219,13 +226,7 @@ def streaming_dsir_score(
             .parquet(out_path)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(score_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_s)
+    _run_available_now(stream, checkpoint_dir, timeout_s, score_batch)
 
 
 def streaming_containment_score(
@@ -281,13 +282,7 @@ def streaming_containment_score(
         )
         out.write.mode("append").parquet(out_path)
 
-    q = (
-        stream.writeStream.foreachBatch(score_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_s)
+    _run_available_now(stream, checkpoint_dir, timeout_s, score_batch)
 
 
 def streaming_pq_ingest(
@@ -313,18 +308,12 @@ def streaming_pq_ingest(
         pq_code_table_append,
     )
 
-    stream = spark.readStream.schema(EMBEDDINGS_STREAM_SCHEMA).json(src_dir)
-
-    def append_batch(batch_df: DataFrame, _epoch: int) -> None:
-        pq_code_table_append(spark, table_path, batch_df)
-
-    q = (
-        stream.writeStream.foreachBatch(append_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_available_now(
+        spark.readStream.schema(EMBEDDINGS_STREAM_SCHEMA).json(src_dir),
+        checkpoint_dir,
+        timeout_s,
+        lambda batch_df, _epoch: pq_code_table_append(spark, table_path, batch_df),
     )
-    q.awaitTermination(timeout_s)
 
 
 def streaming_ivfpq_ingest(
@@ -349,18 +338,12 @@ def streaming_ivfpq_ingest(
         ivfpq_index_append,
     )
 
-    stream = spark.readStream.schema(EMBEDDINGS_STREAM_SCHEMA).json(src_dir)
-
-    def append_batch(batch_df: DataFrame, _epoch: int) -> None:
-        ivfpq_index_append(spark, index_path, batch_df)
-
-    q = (
-        stream.writeStream.foreachBatch(append_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_available_now(
+        spark.readStream.schema(EMBEDDINGS_STREAM_SCHEMA).json(src_dir),
+        checkpoint_dir,
+        timeout_s,
+        lambda batch_df, _epoch: ivfpq_index_append(spark, index_path, batch_df),
     )
-    q.awaitTermination(timeout_s)
 
 
 def ks_monitor_process_batch(
@@ -509,12 +492,6 @@ def streaming_ks_monitor(
             round_dp=round_dp,
         )
 
-    q = (
-        spark.readStream.schema(schema)
-        .json(src_dir)
-        .writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_available_now(
+        spark.readStream.schema(schema).json(src_dir), checkpoint_dir, timeout_s, _sink
     )
-    q.awaitTermination(timeout_s)

@@ -2,7 +2,7 @@
 
 The driver's correctness gate checks the first 50 registry keys, so the
 dict order is load-bearing. Rotation is declarative since round 9:
-``registry.ROUND15_WINDOW`` is reordered to the front of ``QUERIES`` at
+``registry.DRIVER_WINDOW`` is reordered to the front of ``QUERIES`` at
 import time and these tests pin its composition.
 
 Round-15 rule (r14 verdict ask #2): the window is the 19 rows whose
@@ -19,10 +19,10 @@ import pytest
 from pyspark_etl_twitter_spark.plans.registry import (
     ORACLES,
     QUERIES,
-    ROUND15_WINDOW,
+    DRIVER_WINDOW,
 )
 
-DRIVER_WINDOW = 50
+WINDOW_SIZE = 50
 
 # the only queries allowed to lack a SQL oracle (approximate / hash-seeded
 # semantics not expressible in ANSI SQL — driver records rows-only). Each
@@ -51,8 +51,8 @@ ROWS_ONLY_BY_DESIGN = {
 
 
 def test_window_is_the_declared_rotation():
-    assert list(QUERIES)[:DRIVER_WINDOW] == ROUND15_WINDOW
-    assert len(set(ROUND15_WINDOW)) == DRIVER_WINDOW
+    assert list(QUERIES)[:WINDOW_SIZE] == DRIVER_WINDOW
+    assert len(set(DRIVER_WINDOW)) == WINDOW_SIZE
 
 
 def test_window_composition_r15():
@@ -61,7 +61,7 @@ def test_window_composition_r15():
     both r13 and r14, leading the window at last. The other 18 r10-stale
     rows follow it, then the 31 alphabetically-first oracle-backed r11
     rows fill the window."""
-    window = list(QUERIES)[:DRIVER_WINDOW]
+    window = list(QUERIES)[:WINDOW_SIZE]
     assert set(window) & ROWS_ONLY_BY_DESIGN == {"semdedup_fast_summary"}
     assert all(k in ORACLES for k in window if k != "semdedup_fast_summary")
     assert window[0] == "semdedup_fast_summary"
@@ -116,7 +116,7 @@ def test_window_outputs_are_driver_hashable(spark):
     ADVICE: the old docstring claimed a smoke-run it didn't do)."""
     from tests.conftest import SF_TINY
 
-    for name in list(QUERIES)[:DRIVER_WINDOW]:
+    for name in list(QUERIES)[:WINDOW_SIZE]:
         df = QUERIES[name](spark, SF_TINY)
         if name in ORACLES:
             for f in df.schema.fields:
