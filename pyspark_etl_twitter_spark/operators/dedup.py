@@ -481,14 +481,18 @@ def build_minhash_index(
       joins, precomputed so a probe NEVER re-tokenizes or re-hashes an
       indexed document (texts are read back only by a deployment that
       wants the surviving bodies). Sorted by id for stats pruning.
-    - ``texts/``: (doc_id, text) of the INDEXED docs, sorted by id —
-      written LAST by appends, so its id set is the store's commit
-      surface (the replay/id guard keys on it). A deployment whose
+    - ``texts/``: (doc_id, text) of the INDEXED docs, sorted by id; its
+      id set is what the replay/id guard keys on. A deployment whose
       corpus is already a table can point this at it; storing it keeps
       the index self-contained.
     - ``meta/``: one row (num_hashes, bands, shingle_n, threshold,
       star_bucket_threshold, est_slack) so appends are self-describing
       and use the exact hash family/banding the index was built with.
+      The same row is the manifest's build parameters.
+
+    All five tables commit together in one manifest swap
+    (``operators/indexstore.py``), as does every later append, compaction
+    and rebuild.
 
     Every stage uses the md5 ``portable_term_hash`` family, so the whole
     incremental flow (signatures, band keys, star guard, prefilter,
@@ -499,9 +503,6 @@ def build_minhash_index(
     # MEMORY_AND_DISK, so a corpus-scale build spills instead of OOMing
     from pyspark import StorageLevel
 
-    # mutation begins: a crash mid-build over an EXISTING store must not
-    # leave a stale clean marker on mixed old/new tables
-    _mh_clear_clean(path)
     terms = _distinct_terms(docs, id_col, text_col, shingle_n).persist(
         StorageLevel.MEMORY_AND_DISK
     )
@@ -513,15 +514,13 @@ def build_minhash_index(
     )
     # sigs/ first and alone: its job materializes BOTH caches (sigs reads
     # terms), so the concurrent wave below hits warm blocks instead of
-    # racing to compute the same partitions. bands/terms/texts have no
-    # ordering constraint among themselves for a BUILD (a crashed build
-    # leaves no clean marker and must simply be re-run — unlike appends,
-    # there is no pre-existing committed state to protect), so they run
+    # racing to compute the same partitions. bands/terms/texts then run
     # as one 3-concurrent wave (guide §2.6): each write's straggler tail
     # frees cores the next job back-fills — 4 sequential jobs → 1 + wave.
+    # Nothing is visible until the one commit at the end.
     t_texts, t_bands, t_sigs, t_terms = indexstore.MINHASH_TABLES
-    indexstore.write(sigs.withColumnRenamed("_id", "doc_id"), path, t_sigs)
-    indexstore.write_wave(
+    first = indexstore.write(sigs.withColumnRenamed("_id", "doc_id"), path, t_sigs)
+    wave = indexstore.write_wave(
         lambda: indexstore.write(band_rows, path, t_bands),
         lambda: indexstore.write(
             terms.select(F.col("_id").alias("doc_id"), "term"), path, t_terms
@@ -535,7 +534,7 @@ def build_minhash_index(
     sigs.unpersist()
     terms.unpersist()
     # NOT NULL: the meta/ parquet schema every existing store was written with
-    indexstore.write_meta(
+    meta = indexstore.write_meta(
         docs.sparkSession,
         path,
         "num_hashes int NOT NULL, bands int NOT NULL, shingle_n int NOT NULL,"
@@ -548,101 +547,7 @@ def build_minhash_index(
         star_bucket_threshold=star_bucket_threshold,
         est_slack=est_slack,
     )
-    # a fresh build is orphan-free and duplicate-free by construction:
-    # commit the clean marker so probes take the fast path (_mh_is_clean)
-    _mh_set_clean(path)
-
-
-def _mh_marker(path: str) -> str:
-    """Path of the store's clean marker (local-fs idiom; see below)."""
-    return f"{indexstore.require_local_path(path)}/_CLEAN"
-
-
-def _mh_is_clean(path: str) -> bool:
-    """True iff the store is CLEAN: every bands/sigs/terms row belongs to
-    a committed (texts/-present) document and no physical duplicates
-    exist — the invariant under which probes may skip the defensive
-    ``dropDuplicates`` + commit-surface filtering entirely (r14 verdict
-    ask #7: at 100 TB those are recurring corpus-sized exchanges paid to
-    tolerate a rare crash).
-
-    Transactional-marker protocol (single-writer by store contract):
-    ``build``/``rebuild``/``compact`` leave a physically-deduplicated,
-    orphan-free store and SET the marker; every mutator CLEARS it first,
-    so any crash mid-write leaves the marker absent and all subsequent
-    readers take the defensive path (dedup + left-semi against texts/,
-    the commit surface) until a compaction/rebuild physically heals the
-    store. An append that STARTED on a dirty store leaves it dirty even
-    on success (its own writes are clean, but the pre-existing orphans/
-    duplicates remain until compaction). Stores written by older engine
-    versions have no marker and therefore read defensively — backward
-    compatible by construction. The marker is a zero-byte file (the
-    local-fs form of the ``_latest``-pointer idiom the KS monitor uses);
-    a deployment on an object store uses its pointer-file/manifest
-    equivalent."""
-    import os
-
-    return os.path.exists(_mh_marker(path))
-
-
-def _mh_set_clean(path: str) -> None:
-    from pathlib import Path as _Path
-
-    _Path(_mh_marker(path)).touch()
-
-
-def _mh_clear_clean(path: str) -> None:
-    import os
-
-    try:
-        os.unlink(_mh_marker(path))
-    except FileNotFoundError:
-        pass
-
-
-def _mh_guard(
-    df: DataFrame, committed: DataFrame | None, dedup_cols: list[str] | None = None
-) -> DataFrame:
-    """Read guard for a DIRTY store; ``committed`` holds its texts/ ids
-    (None: a clean store, read as is). texts/ is the commit surface, so
-    the left-semi against the committed ids removes every orphan — rows
-    of a batch whose texts/ commit never landed, which would otherwise
-    act as indexed partners and drop new docs against a text-less ghost;
-    ``dropDuplicates`` removes rows a replayed epoch re-wrote."""
-    if committed is None:
-        return df
-    return df.dropDuplicates(dedup_cols).join(committed, "doc_id", "left_semi")
-
-
-def _mh_begin_rewrite(spark: SparkSession, path: str) -> DataFrame | None:
-    """Start a compaction or rebuild: clear the clean marker and return
-    the committed ids of a dirty store, checkpointed before any table is
-    overwritten (None for a clean store)."""
-    clean = _mh_is_clean(path)
-    _mh_clear_clean(path)
-    if clean:
-        return None
-    return (
-        spark.read.parquet(f"{path}/texts")
-        .select("doc_id")
-        .distinct()
-        .localCheckpoint()
-    )
-
-
-def _mh_rewrite_edit(committed: DataFrame | None, dropped: DataFrame | None = None):
-    """Per-table edit of a MinHash rewrite: a dirty store loses its
-    duplicate rows and its rows beyond the commit surface (texts/ is that
-    surface), then the ``dropped`` docs go."""
-
-    def edit(table: indexstore.Table, df: DataFrame) -> DataFrame:
-        if committed is not None:
-            df = df.dropDuplicates() if table.name == "texts" else _mh_guard(df, committed)
-        if dropped is not None:
-            df = df.join(dropped, "doc_id", "left_anti")
-        return df
-
-    return edit
+    indexstore.commit(path, first, *wave, meta)
 
 
 def minhash_index_append(
@@ -689,21 +594,10 @@ def minhash_index_append(
        doc, or with a smaller-id batch doc (the pair-min rule; chains are
        handled by ``rebuild_minhash_index``, like every LSH dedup).
        Empty docs have no terms → no bands → always survive.
-    6. Append the SURVIVORS' band rows, signatures, and terms (three
-       concurrent jobs — no ordering constraint among them), then texts
-       LAST — ``texts/`` is the commit surface the id guard keys on, so
-       a crash between writes re-processes the batch and lands orphan
-       bands/sigs/terms rows (never missing ones). The store's clean
-       marker (``_mh_is_clean``) is cleared before the first write and
-       re-set only when the append both started clean and committed:
-       probes of a CLEAN store skip the defensive guards outright, while
-       probes of a DIRTY store ``dropDuplicates`` every stored side and
-       left-semi-filter it against the committed (texts/) ids — so a
-       torn append changes no probe result even for a LATER, different
-       batch (r14 ADVICE medium: an orphan must never act as an indexed
-       partner and drop a new doc against a text-less ghost).
-       ``compact_minhash_index`` physically removes orphans/duplicates
-       and restores the marker.
+    6. Append the SURVIVORS' band rows, signatures, terms and texts as
+       four concurrent jobs and one commit: a crash before the manifest
+       swap leaves the store exactly as it was, so a replay re-processes
+       the batch against the same state.
 
     The band-probe chain, the prefiltered candidate set, and the verify
     term relation are each ``localCheckpoint``-ed — all bounded by the
@@ -717,43 +611,22 @@ def minhash_index_append(
     already in the index are dropped up front (the candidate join's
     strict ``id < id`` would otherwise never pair a doc with its own
     replayed copy), and same-text/new-id copies verify at J=1.0."""
-    meta = indexstore.read_meta(spark, path, builder="build_minhash_index")
-    if "est_slack" not in meta:
-        raise ValueError(
-            f"MinHash store at {path} was written by an older engine "
-            "version (meta lacks est_slack; sigs/ and terms/ may be "
-            "absent) — rebuild it with build_minhash_index before probing"
-        )
+    meta = indexstore.read_meta(path, "build_minhash_index")
     nh, nb, sh = meta["num_hashes"], meta["bands"], meta["shingle_n"]
     thr, star = meta["threshold"], meta["star_bucket_threshold"]
     slack = meta["est_slack"]
     from pyspark.sql import Window
 
-    # clean-store fast path (r14 verdict ask #7): on a store whose clean
-    # marker is present (all rows committed, no physical duplicates) the
-    # defensive dropDuplicates + commit-surface filters below are provable
-    # no-ops and are SKIPPED — at 100 TB they are corpus-sized exchanges
-    # paid per probe. The marker is cleared now, before any write this
-    # append performs, so a crash leaves the store dirty for every later
-    # reader.
-    clean = _mh_is_clean(path)
-    _mh_clear_clean(path)
-    committed_ids = spark.read.parquet(f"{path}/texts").select("doc_id")
-    indexed_ids = committed_ids.select(F.col("doc_id").alias(id_col))
+    indexed_ids = indexstore.read(spark, path, "texts").select(
+        F.col("doc_id").alias(id_col)
+    )
     new_docs = new_docs.join(indexed_ids, id_col, "left_anti")
     new_terms = _distinct_terms(new_docs, id_col, text_col, sh)
     # ONE batch tokenize+hash pass: signatures are checkpointed (batch-
     # sized), and band rows are a projection of them
     new_sigs = _portable_sigs_from_terms(new_terms, nh).localCheckpoint()
     new_bands = _bands_from_sigs(new_sigs, nh, nb)
-    # committed ids never collide with batch ids (new_docs is anti-joined
-    # against them above), so the guard also drops a replay's orphans
-    guard_ids = None if clean else committed_ids
-    stored = _mh_guard(
-        spark.read.parquet(f"{path}/bands"),
-        guard_ids,
-        ["doc_id", "band_id", "band_key"],
-    )
+    stored = indexstore.read(spark, path, "bands")
     keys = new_bands.select("band_id", "band_key").distinct()
     touched = stored.join(keys, ["band_id", "band_key"], "left_semi")
     members = touched.select(
@@ -796,9 +669,9 @@ def minhash_index_append(
     cand = cand_small.union(cand_star).distinct()
 
     # signature-estimate prefilter BEFORE any term fetch: batch sigs are
-    # in hand, partner sigs come from the store (guarded only when dirty)
+    # in hand, partner sigs come from the store
     sig_union = new_sigs.withColumnRenamed("_id", "doc_id").unionByName(
-        _mh_guard(spark.read.parquet(f"{path}/sigs"), guard_ids, ["doc_id"])
+        indexstore.read(spark, path, "sigs")
     )
     sa_sig = sig_union.select(
         F.col("doc_id").alias("doc_a"),
@@ -827,11 +700,11 @@ def minhash_index_append(
     # re-tokenizes indexed docs; checkpoint the (batch + collisions)-
     # bounded relation so verify's three uses (sizes + both join sides)
     # read it instead of re-running the scans
-    old_terms = _mh_guard(
-        spark.read.parquet(f"{path}/terms").join(cand_ids, "doc_id", "left_semi"),
-        guard_ids,
-        ["doc_id", "term"],
-    ).select(F.col("doc_id").alias("_id"), "term")
+    old_terms = (
+        indexstore.read(spark, path, "terms")
+        .join(cand_ids, "doc_id", "left_semi")
+        .select(F.col("doc_id").alias("_id"), "term")
+    )
     terms = new_terms.unionByName(old_terms).localCheckpoint()
     vpairs = _verify_jaccard(cand, terms, thr)
 
@@ -857,41 +730,25 @@ def minhash_index_append(
     )
 
     surv_ids = survivors.select(F.col(id_col).alias("_id"))
-    # parquet file listings are captured at read time (InMemoryFileIndex),
-    # so the lazy stored-side plans are not perturbed by these appends
-    # when `survivors` re-executes for the caller. Write order contract:
-    # texts/ LAST (the id-guard/commit surface — see the docstring);
-    # bands/sigs/terms carry no ordering constraint among THEMSELVES (any
-    # crashed subset is orphan rows the dirty path neutralizes), so they
-    # run as three CONCURRENT jobs (guide §2.6: each write's tail leaves
-    # cores idle that the next job back-fills) — the r14 verdict's
-    # per-batch-constant ask: four sequential store-IO jobs → one
-    # 3-concurrent wave + the texts commit. Survivors are batch docs, so
-    # their term rows all sit in the checkpointed verify relation
-    # (new_terms ⊆ terms; indexed ids are never survivors).
-    indexstore.write_wave(
-        lambda: new_bands.join(surv_ids, "_id", "left_semi")
-        .select(F.col("_id").alias("doc_id"), "band_id", "band_key")
-        .write.mode("append")
-        .parquet(f"{path}/bands"),
-        lambda: new_sigs.join(surv_ids, "_id", "left_semi")
-        .withColumnRenamed("_id", "doc_id")
-        .write.mode("append")
-        .parquet(f"{path}/sigs"),
-        lambda: terms.join(surv_ids, "_id", "left_semi")
-        .select(F.col("_id").alias("doc_id"), "term")
-        .write.mode("append")
-        .parquet(f"{path}/terms"),
+    # the stored-side scans name the files of the version read above, so
+    # `survivors` re-executing for the caller sees the same store. The
+    # four appends run as one wave of concurrent jobs (guide §2.6: each
+    # write's tail leaves cores idle that the next job back-fills) and
+    # commit together. Survivors are batch docs, so their term rows all
+    # sit in the checkpointed verify relation (new_terms ⊆ terms; indexed
+    # ids are never survivors).
+    def surviving(df: DataFrame) -> DataFrame:
+        return df.join(surv_ids, "_id", "left_semi").withColumnRenamed("_id", "doc_id")
+
+    texts = survivors.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+    t_texts, t_bands, t_sigs, t_terms = indexstore.MINHASH_TABLES
+    indexstore.append(
+        path,
+        (t_bands, surviving(new_bands).select("doc_id", "band_id", "band_key")),
+        (t_sigs, surviving(new_sigs)),
+        (t_terms, surviving(terms).select("doc_id", "term")),
+        (t_texts, texts),
     )
-    survivors.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-    ).write.mode("append").parquet(f"{path}/texts")
-    # commit: an append that started CLEAN leaves the store clean (its
-    # own writes are duplicate- and orphan-free once texts/ lands); one
-    # that started dirty must stay dirty — the pre-existing orphans/
-    # duplicates are only physically removed by compact/rebuild
-    if clean:
-        _mh_set_clean(path)
     return survivors
 
 
@@ -1645,7 +1502,7 @@ def semdedup_from_ivf(
     tradeoff is the same, the cells differ)."""
     from pyspark_etl_twitter_spark.operators.similarity import dot
 
-    vecs = spark.read.parquet(f"{index_path}/assignments").select(
+    vecs = indexstore.read(spark, index_path, "assignments").select(
         "vec_id", "emb", "nrm", "list_id"
     )
     a, b = vecs.alias("a"), vecs.alias("b")
@@ -1840,24 +1697,10 @@ def compact_minhash_index(spark: SparkSession, path: str) -> tuple[int, int]:
     the incremental-dedup story. Rewrites each table in the build layout
     (range-partitioned + sorted: (band_id, band_key) for bands, doc_id
     for sigs/terms/texts), leaving meta and probe results untouched
-    (equality tested). On a DIRTY store (clean marker absent) the torn-
-    append residue — rows duplicated by a replayed epoch, and orphan
-    rows whose texts/ commit never landed — is physically removed (the
-    same dedup + commit-surface semi-join the dirty probe path applies)
-    and the clean marker is restored, so subsequent probes take the
-    fast path; a CLEAN store is duplicate- and orphan-free by invariant
-    and its rewrite is a pure re-layout. Each table is
-    localCheckpoint-ed first so the rewrite never reads the files it
-    overwrites; texts/ is rewritten FIRST so a crash mid-compaction
-    leaves only orphan-shaped residue (rows beyond the commit surface),
-    never committed ids with missing rows. Single-writer by contract.
-    Returns (files_before, files_after) over all tables."""
-    committed = _mh_begin_rewrite(spark, path)
-    files = indexstore.compact(
-        spark, path, indexstore.MINHASH_TABLES, _mh_rewrite_edit(committed)
-    )
-    _mh_set_clean(path)
-    return files
+    (equality tested), and commits the four rewrites together.
+    Single-writer by contract. Returns (files_before, files_after) over
+    all tables."""
+    return indexstore.compact(spark, path, indexstore.MINHASH_TABLES)
 
 
 def rebuild_minhash_index(spark: SparkSession, path: str) -> DataFrame:
@@ -1877,32 +1720,21 @@ def rebuild_minhash_index(spark: SparkSession, path: str) -> DataFrame:
     a document (the one-shot candidate algebra over the store's docs, by
     the append≡rebuild band equality the tests pin). Cluster collapse is
     ``duplicate_clusters`` (partition-local contraction CC). The dropped
-    set is localCheckpoint-ed (bounded by the duplicate count) before
-    any table is overwritten; each surviving table is checkpointed
-    before its rewrite, compaction-style. Returns the kept (doc_id,
-    text) rows re-read from the rewritten store.
+    set is localCheckpoint-ed (bounded by the duplicate count), since all
+    four table rewrites read it; they commit together. Returns the kept
+    (doc_id, text) rows re-read from the rewritten store.
 
     Equality contract (oracle-pinned by ``dedup_minhash_maintenance``):
     rebuild-after-appends ≡ clusters+keep-canonical over the one-shot
     portable pair algebra on (corpus ∪ append survivors)."""
     from pyspark.sql import Window
 
-    meta = indexstore.read_meta(spark, path, builder="build_minhash_index")
+    meta = indexstore.read_meta(path, "build_minhash_index")
     star, thr = meta["star_bucket_threshold"], meta["threshold"]
-    # clean-store fast path + dirty-store commit-surface guard (r14
-    # verdict ask #7 + ADVICE medium): a rebuild of a DIRTY store must
-    # not cluster torn-append orphans — an orphan could otherwise become
-    # a cluster's canonical (min id) while its text is absent, dropping
-    # committed content in favor of a ghost. Same protocol as the probe
-    # path: dirty reads dedup + left-semi against the committed (texts/)
-    # ids; clean reads skip both.
-    committed = _mh_begin_rewrite(spark, path)
-    band_rows = _mh_guard(
-        spark.read.parquet(f"{path}/bands"), committed, ["doc_id", "band_id", "band_key"]
+    band_rows = indexstore.read(spark, path, "bands")
+    terms = indexstore.read(spark, path, "terms").select(
+        F.col("doc_id").alias("_id"), "term"
     )
-    terms = _mh_guard(
-        spark.read.parquet(f"{path}/terms"), committed, ["doc_id", "term"]
-    ).select(F.col("doc_id").alias("_id"), "term")
     w = Window.partitionBy("band_id", "band_key")
     st = band_rows.withColumn("_bsz", F.count(F.lit(1)).over(w)).withColumn(
         "_bmin", F.min("doc_id").over(w)
@@ -1926,14 +1758,13 @@ def rebuild_minhash_index(spark: SparkSession, path: str) -> DataFrame:
         .select("doc_id")
         .localCheckpoint()
     )
-    # texts/ first (MINHASH_TABLES order): a crash mid-rewrite then leaves
-    # only orphan-shaped residue, which the dirty probe path neutralizes
-    # and a re-run rebuild or compaction physically heals
-    edit = _mh_rewrite_edit(committed, dropped)
-    for table in indexstore.MINHASH_TABLES:
-        indexstore.rewrite(spark, path, table, edit)
-    _mh_set_clean(path)
-    return spark.read.parquet(f"{path}/texts")
+    indexstore.compact(
+        spark,
+        path,
+        indexstore.MINHASH_TABLES,
+        lambda df: df.join(dropped, "doc_id", "left_anti"),
+    )
+    return indexstore.read(spark, path, "texts")
 
 
 # --------------------------------------------------------------------------

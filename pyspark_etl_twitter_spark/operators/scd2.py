@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pyspark_etl_twitter_spark.operators.indexstore import require_local_path
+from pyspark_etl_twitter_spark.operators.indexstore import read_pointer, swap_pointer
 
 
 def upsert_latest(
@@ -149,12 +149,10 @@ def snapshot_diff(
 
 
 def _read_latest_pointer(spark, path: str):
-    import os
-
-    ptr = os.path.join(require_local_path(path), "_latest")
-    if not os.path.exists(ptr):
+    raw = read_pointer(f"{path}/_latest")
+    if raw is None:
         return None, None
-    raw = open(ptr).read().split()
+    raw = raw.split()
     return int(raw[0]), (raw[1] if len(raw) > 1 else None)
 
 
@@ -204,11 +202,7 @@ def merge_upsert_snapshot(
     snapshot dirs would be partitioned by a key prefix so the anti-join
     co-locates and untouched partitions hard-link forward — the pointer
     mechanism is unchanged by that optimization."""
-    import os
-    import tempfile
-
     current_version, current_epoch = _read_latest_pointer(spark, path)
-    path = path.removeprefix("file://")  # validated local by the read
     if epoch_id is not None and current_epoch == str(epoch_id):
         return current_version
     updates = updates.dropDuplicates()
@@ -231,10 +225,9 @@ def merge_upsert_snapshot(
             current.join(updates.select(key).distinct(), key, "left_anti")
         )
     merged.write.mode("overwrite").parquet(f"{path}/v={new_version}")
-    fd, tmp = tempfile.mkstemp(dir=path, prefix="_latest.")
-    with os.fdopen(fd, "w") as f:
-        f.write(f"{new_version} {epoch_id if epoch_id is not None else '-'}")
-    os.replace(tmp, os.path.join(path, "_latest"))  # atomic pointer swap
+    swap_pointer(
+        f"{path}/_latest", f"{new_version} {epoch_id if epoch_id is not None else '-'}"
+    )
     return new_version
 
 

@@ -718,7 +718,7 @@ def build_ivf_index(
         train_iters=train_iters,
         coarse_probe=_auto_coarse_probe(coarse_probe, n_lists),
     )
-    _write_ivf_tables(path, assignments, centroids, max_queries)
+    _write_ivf_tables(path, assignments, centroids, n_lists, max_queries)
 
 
 def _auto_coarse_probe(coarse_probe: int | None | str, n_lists: int) -> int | None:
@@ -730,32 +730,33 @@ def _auto_coarse_probe(coarse_probe: int | None | str, n_lists: int) -> int | No
 
 
 def _write_ivf_tables(
-    path: str, assignments: DataFrame, centroids: DataFrame, max_queries: int
+    path: str,
+    assignments: DataFrame,
+    centroids: DataFrame,
+    n_lists: int,
+    max_queries: int,
 ) -> None:
-    """Write the IVF store's three tables. The assignment (centroid cross
-    join + argmin) feeds both the assignments and the query block, so it
-    is cached for one compute pass: the big write runs first and fills
-    the cache, then the two single-file writes run as one wave over warm
-    blocks."""
+    """Write and commit the IVF store's three tables. The assignment
+    (centroid cross join + argmin) feeds both the assignments and the
+    query block, so it is cached for one compute pass: the big write runs
+    first and fills the cache, then the two single-file writes run as one
+    wave over warm blocks."""
     assignments = assignments.persist()
+    queries = assignments.filter(F.col("vec_id") < max_queries).select(
+        F.col("vec_id").alias("q_id"),
+        F.col("emb").alias("q_emb"),
+        F.col("nrm").alias("q_nrm"),
+    )
     try:
-        indexstore.write(assignments, path, indexstore.IVF_ASSIGNMENTS)
-        indexstore.write_wave(
-            lambda: centroids.coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{path}/centroids"),
-            lambda: assignments.filter(F.col("vec_id") < max_queries)
-            .select(
-                F.col("vec_id").alias("q_id"),
-                F.col("emb").alias("q_emb"),
-                F.col("nrm").alias("q_nrm"),
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{path}/queries"),
+        written = indexstore.write(assignments, path, indexstore.IVF_ASSIGNMENTS)
+        wave = indexstore.write_wave(
+            lambda: indexstore.write(centroids.coalesce(1), path, indexstore.IVF_CENTROIDS),
+            lambda: indexstore.write(queries.coalesce(1), path, indexstore.QUERIES),
         )
     finally:
         assignments.unpersist()
+    params = {"n_lists": n_lists, "max_queries": max_queries}
+    indexstore.commit(path, written, *wave, params=params)
 
 
 def ivf_build_plan(
@@ -827,9 +828,9 @@ def ivf_probe_indexed(
     at bench SF; at 100 TB cost tracks bytes ∝ n_probe/n_lists).
     Training the index tightens the same frontier (see
     ``build_ivf_index``: iters 8 → 0.654/0.782 at n_probe 4/6)."""
-    assignments = spark.read.parquet(f"{path}/assignments")
-    centroids = spark.read.parquet(f"{path}/centroids")
-    queries = spark.read.parquet(f"{path}/queries").filter(
+    assignments = indexstore.read(spark, path, "assignments")
+    centroids = indexstore.read(spark, path, "centroids")
+    queries = indexstore.read(spark, path, "queries").filter(
         F.col("q_id") < n_queries
     )
     return _ivf_probe(
@@ -924,17 +925,20 @@ def build_lsh_index(
             )
         if layout not in indexstore.LSH_CORPUS:
             raise ValueError(f"layout must be auto|partitioned|flat, got {layout!r}")
-        indexstore.write(corpus, path, indexstore.LSH_CORPUS[layout])
-        base.filter(F.col("vec_id") < max_queries).select(
+        queries = base.filter(F.col("vec_id") < max_queries).select(
             F.col("vec_id").alias("q_id"),
             F.col("emb").alias("q_emb"),
             F.col("nrm").alias("q_nrm"),
             F.col("t").alias("q_t"),
             F.col("bucket").alias("q_bucket"),
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/queries")
+        )
+        written = [
+            indexstore.write(corpus, path, indexstore.LSH_CORPUS[layout]),
+            indexstore.write(queries.coalesce(1), path, indexstore.QUERIES),
+        ]
     finally:
         base.unpersist()
-    indexstore.write_meta(
+    meta = indexstore.write_meta(
         embeddings.sparkSession,
         path,
         "layout string, n_planes int, n_tables int, seed int, quantize boolean",
@@ -944,6 +948,7 @@ def build_lsh_index(
         seed=seed,
         quantize=bool(quantize),
     )
+    indexstore.commit(path, *written, meta)
 
 
 def _lsh_quantize(base: DataFrame) -> DataFrame:
@@ -983,9 +988,9 @@ def lsh_probe_indexed(
     (the probe joins on the OR-construction ``t``/``q_t`` columns, which a
     pre-meta single-table layout lacks — it would fail mid-plan with an
     AnalysisException, so fail early and say how to fix it)."""
-    meta = indexstore.read_meta(spark, path, builder="build_lsh_index")
+    meta = indexstore.read_meta(path, "build_lsh_index")
     n_planes = meta["n_planes"]
-    corpus = spark.read.parquet(f"{path}/corpus")
+    corpus = indexstore.read(spark, path, "corpus")
     if meta.get("quantize"):
         # int8 codes: cos = q_scale·Σ code_i·q_i / (nrm·q_nrm). Folding the
         # scale into nrm (nrm' = nrm/q_scale) leaves the shared scoring
@@ -993,7 +998,7 @@ def lsh_probe_indexed(
         corpus = corpus.withColumn(
             "nrm", F.col("nrm") / F.col("q_scale")
         ).drop("q_scale")
-    queries = spark.read.parquet(f"{path}/queries").filter(
+    queries = indexstore.read(spark, path, "queries").filter(
         F.col("q_id") < n_queries
     ).select(
         "q_id",
@@ -1138,7 +1143,7 @@ def ivf_index_append(
     same O(batch·√k) rung cuts it. ``None`` forces exact at any k; an
     int picks the probe width (>= ⌈√k⌉ is bit-identical to exact, the
     ``ivf_assignments`` exhaustive contract)."""
-    centroids = spark.read.parquet(f"{path}/centroids")
+    centroids = indexstore.read(spark, path, "centroids")
     crows = sorted(centroids.collect(), key=lambda r: r["list_id"])
     coarse_probe = _auto_coarse_probe(coarse_probe, len(crows))
     base = new_embeddings.filter(F.col(vec_col).isNotNull()).select(
@@ -1164,7 +1169,7 @@ def ivf_index_append(
             .filter(F.col("_rk") == 1)
             .select("vec_id", "emb", "nrm", "list_id")
         )
-    indexstore.append(spark, assigned, path, indexstore.IVF_ASSIGNMENTS)
+    indexstore.append(path, (indexstore.IVF_ASSIGNMENTS, assigned))
 
 
 def lsh_index_append(
@@ -1188,7 +1193,7 @@ def lsh_index_append(
     NULL-vector first row must not masquerade as an empty batch (silently
     skipping the real rows), and NULL rows in any position must not be
     written as corrupt bucket entries."""
-    meta = indexstore.read_meta(spark, path, builder="build_lsh_index")
+    meta = indexstore.read_meta(path, "build_lsh_index")
     n_planes, n_tables, seed = meta["n_planes"], meta["n_tables"], meta["seed"]
     new_embeddings = new_embeddings.filter(F.col(vec_col).isNotNull())
     probe = new_embeddings.select(vec_col).first()
@@ -1201,7 +1206,7 @@ def lsh_index_append(
     base = _lsh_base(new_embeddings, planes_by_table, id_col=id_col, vec_col=vec_col)
     if meta.get("quantize"):
         base = _lsh_quantize(base)
-    indexstore.append(spark, base, path, indexstore.LSH_CORPUS[meta["layout"]])
+    indexstore.append(path, (indexstore.LSH_CORPUS[meta["layout"]], base))
 
 
 def ann_recall_at_k(approx: DataFrame, exact: DataFrame, *, k: int = 5) -> DataFrame:
@@ -1244,13 +1249,9 @@ def compact_lsh_index(spark, path: str) -> tuple[int, int]:
     a Delta table). Rewrites the corpus in its own layout (partitioned
     dirs → one file per (t, bucket); flat → range-sorted files), leaving
     buckets, meta, and probe results untouched (equality tested).
-
-    The corpus is localCheckpoint-ed first so the rewrite never reads
-    the files it is overwriting (lineage to the old files is severed
-    before the overwrite starts). Single-writer by contract, like every
-    sink in this package. Returns (files_before, files_after)."""
-    meta = indexstore.read_meta(spark, path)
-    layout = meta["layout"] if meta is not None else "partitioned"
+    Single-writer by contract, like every sink in this package. Returns
+    (files_before, files_after)."""
+    layout = indexstore.read_meta(path, "build_lsh_index")["layout"]
     return indexstore.compact(spark, path, (indexstore.LSH_CORPUS[layout],))
 
 
@@ -1291,13 +1292,13 @@ def rebalance_ivf_index(
     rebalance, probing the store must equal the one-shot trained pipeline
     over the UNION (``knn_ivf_rebalanced`` pins it against
     ``ORACLE_KNN_IVF_TRAINED`` verbatim)."""
-    # checkpointed: the writes below overwrite the table it reads
+    # checkpointed: training and the re-assignment both scan it
     stored = (
-        spark.read.parquet(f"{path}/assignments")
+        indexstore.read(spark, path, "assignments")
         .select("vec_id", "emb")
         .localCheckpoint()
     )
-    n_lists = spark.read.parquet(f"{path}/centroids").count()
+    n_lists = indexstore.manifest(path)["tables"]["centroids"]["rows"]
     coarse_probe = _auto_coarse_probe(coarse_probe, n_lists)
     if portable:
         from pyspark_etl_twitter_spark.operators.clustering import (
@@ -1306,7 +1307,7 @@ def rebalance_ivf_index(
 
         cents = kmeans_fit_portable(
             stored,
-            int(n_lists),
+            n_lists,
             vec_col="emb",
             iters=train_iters,
             round_dp=round_dp,
@@ -1314,7 +1315,7 @@ def rebalance_ivf_index(
         assignments, centroids = ivf_assignments(
             stored,
             vec_col="emb",
-            n_lists=int(n_lists),
+            n_lists=n_lists,
             centroid_vectors=cents,
             coarse_probe=coarse_probe,
         )
@@ -1322,14 +1323,11 @@ def rebalance_ivf_index(
         assignments, centroids = ivf_assignments(
             stored,
             vec_col="emb",
-            n_lists=int(n_lists),
+            n_lists=n_lists,
             train_iters=train_iters,
             coarse_probe=coarse_probe,
         )
-    _write_ivf_tables(path, assignments, centroids, max_queries)
-    indexstore.refresh(
-        spark, *(f"{path}/{sub}" for sub in ("assignments", "centroids", "queries"))
-    )
+    _write_ivf_tables(path, assignments, centroids, n_lists, max_queries)
 
 
 def ann_mrr(approx: DataFrame, exact: DataFrame, *, k: int = 5) -> DataFrame:
@@ -1981,23 +1979,27 @@ def build_ivfpq_index(
         raise ValueError(f"corpus has {len(seed_rows)} rows < {seed_n}")
     cents, books, dsub = _ivfpq_model(seed_rows, n_lists, m, ksub)
     encoded = _ivfpq_encode_plan(base, cents, books, m, ksub, dsub)
-    indexstore.write(encoded, path, indexstore.IVFPQ_CODES)
-    indexstore.write_meta(
-        embeddings.sparkSession,
-        path,
-        "n_lists int, m int, ksub int, dsub int, cents array<array<double>>,"
-        " books array<array<array<double>>>",
-        n_lists=n_lists,
-        m=m,
-        ksub=ksub,
-        dsub=dsub,
-        cents=cents,
-        books=books,
-    )
-    base.filter(F.col("vec_id") < max_queries).select(
+    queries = base.filter(F.col("vec_id") < max_queries).select(
         F.col("vec_id").alias("q_id"),
         F.col("_emb").cast("array<double>").alias("q_emb"),
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/queries")
+    )
+    indexstore.commit(
+        path,
+        indexstore.write(encoded, path, indexstore.IVFPQ_CODES),
+        indexstore.write_meta(
+            embeddings.sparkSession,
+            path,
+            "n_lists int, m int, ksub int, dsub int, cents array<array<double>>,"
+            " books array<array<array<double>>>",
+            n_lists=n_lists,
+            m=m,
+            ksub=ksub,
+            dsub=dsub,
+            cents=cents,
+            books=books,
+        ),
+        indexstore.write(queries.coalesce(1), path, indexstore.QUERIES),
+    )
 
 
 def ivfpq_probe_indexed(
@@ -2016,14 +2018,14 @@ def ivfpq_probe_indexed(
     driver-built LUT arithmetic as the one-shot, so results are
     value-identical to ``ivfpq_topk`` on the indexed corpus (pinned in
     pytest and by the shared ``knn_ivfpq`` oracle)."""
-    meta = indexstore.read_meta(spark, path, builder="build_ivfpq_index")
+    meta = indexstore.read_meta(path, "build_ivfpq_index")
     q_rows = sorted(
         (int(r["q_id"]), [float(x) for x in r["q_emb"]])
-        for r in spark.read.parquet(f"{path}/queries")
+        for r in indexstore.read(spark, path, "queries")
         .filter(F.col("q_id") < n_queries)
         .collect()
     )
-    encoded = spark.read.parquet(f"{path}/codes").select(
+    encoded = indexstore.read(spark, path, "codes").select(
         "vec_id", F.col("list_id").cast("int").alias("list_id"), "codes"
     )
     return _ivfpq_probe_plan(
@@ -2058,14 +2060,14 @@ def ivfpq_index_append(
     vectors are dropped (unassignable); idempotence comes from the
     caller's checkpoint (streaming) or run discipline (batch), the
     ``ivf_index_append``/``pq_code_table_append`` contract."""
-    meta = indexstore.read_meta(spark, path, builder="build_ivfpq_index")
+    meta = indexstore.read_meta(path, "build_ivfpq_index")
     base = new_embeddings.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_emb")
     )
     encoded = _ivfpq_encode_plan(
         base, meta["cents"], meta["books"], meta["m"], meta["ksub"], meta["dsub"]
     )
-    indexstore.append(spark, encoded, path, indexstore.IVFPQ_CODES)
+    indexstore.append(path, (indexstore.IVFPQ_CODES, encoded))
 
 
 def pq_train_codebooks(
@@ -2514,19 +2516,22 @@ def build_pq_code_table(
         books = pq_codebooks(
             embeddings, id_col=id_col, vec_col=vec_col, m=m, ksub=ksub
         )
-    indexstore.write(
-        pq_encode(embeddings, books, id_col=id_col, vec_col=vec_col),
+    indexstore.commit(
         path,
-        indexstore.PQ_CODES,
-    )
-    indexstore.write_meta(
-        embeddings.sparkSession,
-        path,
-        "m int, ksub int, dsub int, books array<array<array<double>>>",
-        m=len(books),
-        ksub=len(books[0]),
-        dsub=len(books[0][0]),
-        books=books,
+        indexstore.write(
+            pq_encode(embeddings, books, id_col=id_col, vec_col=vec_col),
+            path,
+            indexstore.PQ_CODES,
+        ),
+        indexstore.write_meta(
+            embeddings.sparkSession,
+            path,
+            "m int, ksub int, dsub int, books array<array<array<double>>>",
+            m=len(books),
+            ksub=len(books[0]),
+            dsub=len(books[0][0]),
+            books=books,
+        ),
     )
 
 
@@ -2542,9 +2547,9 @@ def pq_code_table_append(
     against the FROZEN codebook from its meta. Narrow map + append write;
     idempotence comes from the caller's checkpoint (streaming) or run
     discipline (batch), same contract as ``lsh_index_append``."""
-    books = indexstore.read_meta(spark, path, builder="build_pq_code_table")["books"]
+    books = indexstore.read_meta(path, "build_pq_code_table")["books"]
     encoded = pq_encode(batch, books, id_col=id_col, vec_col=vec_col)
-    indexstore.append(spark, encoded, path, indexstore.PQ_CODES)
+    indexstore.append(path, (indexstore.PQ_CODES, encoded))
 
 
 def pq_adc_topk_indexed(
@@ -2566,7 +2571,7 @@ def pq_adc_topk_indexed(
             f"{len(queries)} queries exceeds MAX_PANDAS_QUERIES="
             f"{MAX_PANDAS_QUERIES}"
         )
-    books = indexstore.read_meta(spark, path, builder="build_pq_code_table")["books"]
+    books = indexstore.read_meta(path, "build_pq_code_table")["books"]
     m, ksub, dsub = len(books), len(books[0]), len(books[0][0])
     lut = [
         [
@@ -2587,7 +2592,7 @@ def pq_adc_topk_indexed(
         if all(-(2**31) <= int(q) <= 2**31 - 1 for q, _ in queries)
         else lit_longs([int(q) for q, _ in queries])
     )
-    codes = spark.read.parquet(f"{path}/codes")
+    codes = indexstore.read(spark, path, "codes")
     qi = F.col("_qi")
     adc = F.aggregate(
         F.sequence(F.lit(0), F.lit(m - 1)),

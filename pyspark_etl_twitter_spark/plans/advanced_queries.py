@@ -583,6 +583,7 @@ def semdedup_ivf_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     from pathlib import Path
 
+    from pyspark_etl_twitter_spark.operators import indexstore
     from pyspark_etl_twitter_spark.operators.dedup import semdedup_from_ivf
     from pyspark_etl_twitter_spark.operators.similarity import build_ivf_index
 
@@ -595,7 +596,7 @@ def semdedup_ivf_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     drops = semdedup_from_ivf(
         spark, path, threshold=SEMANTIC_TAU, round_dp=_KM_DP
     ).withColumn("_d", F.lit(1))
-    assigned = spark.read.parquet(f"{path}/assignments").select(
+    assigned = indexstore.read(spark, path, "assignments").select(
         "vec_id", F.col("list_id").cast("int").alias("list_id")
     )
     return (

@@ -24,6 +24,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pyspark_etl_twitter_spark.functions.lits import local_table
+from pyspark_etl_twitter_spark.operators.indexstore import (
+    read_pointer,
+    require_local_path,
+    swap_pointer,
+)
 
 
 def _run_available_now(
@@ -366,9 +371,10 @@ def ks_monitor_process_batch(
     (b) make Spark read ``hist/v=<batch_id>`` while overwriting the same
     path, which raises and would wedge recovery permanently. The guard
     skips the rewrite and proceeds straight to scoring + log append
-    (consumers dedup the log on batch_id)."""
+    (consumers dedup the log on batch_id). ``state_dir`` must be local:
+    the pointer is a local file, so anything else raises ``ValueError``
+    before any Spark job."""
     import json
-    import os
 
     from pyspark_etl_twitter_spark.operators.quality_checks import (
         ks_from_counts,
@@ -377,10 +383,8 @@ def ks_monitor_process_batch(
 
     bspark = batch_df.sparkSession
     latest = f"{state_dir}/hist/_latest"
-    prev_v = -1
-    if os.path.exists(latest):
-        with open(latest) as fh:
-            prev_v = json.load(fh)["v"]
+    raw = read_pointer(latest)
+    prev_v = -1 if raw is None else json.loads(raw)["v"]
     new_v = batch_id
     if prev_v == new_v:
         pass  # post-flip replay: hist/v=<batch_id> is already merged
@@ -401,10 +405,7 @@ def ks_monitor_process_batch(
         else:
             merged = delta
         merged.write.mode("overwrite").parquet(f"{state_dir}/hist/v={new_v}")
-        tmp = f"{latest}.tmp.{new_v}"
-        with open(tmp, "w") as fh:
-            json.dump({"v": new_v}, fh)
-        os.replace(tmp, latest)
+        swap_pointer(latest, json.dumps({"v": new_v}))
 
     obs = bspark.read.parquet(f"{state_dir}/hist/v={new_v}")
     ref = bspark.read.parquet(f"{state_dir}/reference")
@@ -474,7 +475,10 @@ def streaming_ks_monitor(
     Scale: per batch the stream collapses to its quantized-value counts
     (one narrow agg), merges into the value-domain-bounded histogram,
     and the KS window runs over histogram ∪ reference — state and work
-    per batch are bounded by the value DOMAIN, not the stream length."""
+    per batch are bounded by the value DOMAIN, not the stream length.
+    ``state_dir`` must be local; anything else raises ``ValueError``
+    before any Spark job."""
+    require_local_path(state_dir)
     ref_counts = (
         reference.filter(F.col(value_col).isNotNull())
         .select(F.round(F.col(value_col), round_dp).alias("v"))

@@ -2,6 +2,8 @@
 MinHash/SimHash are xxhash64-based (not DuckDB-oracle-able); their gate is
 recall/precision against the exact operators here."""
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import Row
 
@@ -1370,20 +1372,15 @@ def test_minhash_index_store_tables_consistent(spark, tmp_path):
         assert rows(p_inc) == rows(p_full), sub
 
 
-def test_minhash_torn_append_replay_is_repaired(spark, tmp_path):
-    """Crash-consistency contract (r13 ADVICE, medium): texts/ is the
-    commit surface written LAST — a crash after the bands/sigs/terms
-    appends leaves orphan rows whose ids the replayed epoch re-processes.
-    The replay must see the pre-crash store (dirty-path commit-surface
-    semi-join + defensive dropDuplicates), produce the same survivors,
-    and leave a store whose LOGICAL contents match a clean single append;
-    compaction physically removes the duplicated rows."""
-    import os
-    import shutil
-
+def test_minhash_torn_append_replay_is_repaired(spark, tmp_path, monkeypatch):
+    """Crash-consistency contract (r13 ADVICE, medium): an append that
+    crashes after its bands/sigs/terms/texts files land but before its
+    manifest swap leaves rows no version lists, and the replayed epoch
+    re-processes their ids. The replay must see the pre-crash store,
+    produce the same survivors, and leave a store whose contents match a
+    clean single append: its commit vacuums the crashed attempt's files,
+    so no physical duplicate survives, and compaction keeps it so."""
     from pyspark_etl_twitter_spark.operators.dedup import (
-        _mh_is_clean,
-        _mh_marker,
         build_minhash_index,
         compact_minhash_index,
         minhash_index_append,
@@ -1391,21 +1388,16 @@ def test_minhash_torn_append_replay_is_repaired(spark, tmp_path):
 
     corpus, batch = _mh_fixture(spark)
     kw = _mh_index_kw()
+    # a clean single append on a fresh store: the reference outcome
+    clean = str(tmp_path / "clean")
+    build_minhash_index(corpus, clean, **kw)
+    first = sorted(
+        r.doc_id for r in minhash_index_append(spark, clean, batch).collect()
+    )
+
     path = str(tmp_path / "idx")
     build_minhash_index(corpus, path, **kw)
-    assert _mh_is_clean(path)  # fresh build commits the clean marker
-    # snapshot the commit surface, then 'crash' right before it commits:
-    # run a full append and roll texts/ back to the snapshot. A real
-    # crash happens AFTER the append cleared the marker and BEFORE it
-    # re-set it, so the simulated torn store must have no marker either.
-    shutil.copytree(f"{path}/texts", str(tmp_path / "texts_snap"))
-    first = sorted(
-        r.doc_id for r in minhash_index_append(spark, path, batch).collect()
-    )
-    shutil.rmtree(f"{path}/texts")
-    shutil.copytree(str(tmp_path / "texts_snap"), f"{path}/texts")
-    os.unlink(_mh_marker(path))
-    assert not _mh_is_clean(path)
+    _tear_append(monkeypatch, spark, path, batch)
 
     # replay the same batch against the torn store
     again = sorted(
@@ -1413,27 +1405,20 @@ def test_minhash_torn_append_replay_is_repaired(spark, tmp_path):
     )
     assert again == first == [110, 120]
 
-    # logical contents equal a clean single append on a fresh store
-    clean = str(tmp_path / "clean")
-    build_minhash_index(corpus, clean, **kw)
-    minhash_index_append(spark, clean, batch)
+    # contents equal the clean single append's
     for sub in ("bands", "sigs", "terms", "texts"):
         rows = lambda p: {  # noqa: E731
             tuple(r) for r in spark.read.parquet(f"{p}/{sub}").collect()
         }
         assert rows(path) == rows(clean), sub
 
-    # a dirty-started append leaves the store dirty (physical residue
-    # remains); the torn store carries physical duplicates until
-    # compaction, which removes them and restores the clean marker
-    assert not _mh_is_clean(path)
+    # the crashed attempt's rows are gone from disk, not just unlisted
     n_dup = (
         spark.read.parquet(f"{path}/bands").count()
         - spark.read.parquet(f"{path}/bands").distinct().count()
     )
-    assert n_dup > 0
+    assert n_dup == 0
     compact_minhash_index(spark, path)
-    assert _mh_is_clean(path)
     b = spark.read.parquet(f"{path}/bands")
     assert b.count() == b.distinct().count()
 
@@ -1444,35 +1429,35 @@ def test_minhash_torn_append_replay_is_repaired(spark, tmp_path):
     assert minhash_index_append(spark, path, probe).count() == 0
 
 
-def _tear_append(spark, tmp_path, path, batch):
-    """Run a full append then roll texts/ back and drop the clean marker —
-    the state a crash right before the texts/ commit leaves behind."""
-    import os
-    import shutil
-    import uuid
+def _tear_append(monkeypatch, spark, path, batch):
+    """Run an append that crashes at its manifest swap: the files of all
+    four tables land and no version lists them — the state a crash right
+    before the commit leaves behind."""
+    from pyspark_etl_twitter_spark.operators import indexstore
+    from pyspark_etl_twitter_spark.operators.dedup import minhash_index_append
 
-    from pyspark_etl_twitter_spark.operators.dedup import (
-        _mh_marker,
-        minhash_index_append,
-    )
+    def crash(*_args, **_kwargs):
+        raise RuntimeError("crash before the manifest swap")
 
-    snap = str(tmp_path / f"texts_snap_{uuid.uuid4().hex[:8]}")
-    shutil.copytree(f"{path}/texts", snap)
-    minhash_index_append(spark, path, batch)
-    shutil.rmtree(f"{path}/texts")
-    shutil.copytree(snap, f"{path}/texts")
-    if os.path.exists(_mh_marker(path)):
-        os.unlink(_mh_marker(path))
+    listed = len(indexstore.manifest(path)["tables"]["texts"]["files"])
+    with monkeypatch.context() as m:
+        m.setattr(indexstore, "swap_pointer", crash)
+        with pytest.raises(RuntimeError, match="manifest swap"):
+            minhash_index_append(spark, path, batch)
+    # the torn append's files are on disk, unlisted
+    assert len(list(Path(path, "texts").glob("*.parquet"))) > listed
 
 
-def test_minhash_torn_append_orphan_never_drops_later_batch(spark, tmp_path):
+def test_minhash_torn_append_orphan_never_drops_later_batch(
+    spark, tmp_path, monkeypatch
+):
     """r14 ADVICE (medium): an orphan of a torn append must never act as
-    an indexed partner for a DIFFERENT later batch — without the
-    commit-surface guard the later doc is dropped as the orphan's
-    near-dup while the orphan's text was never committed, losing the
-    content on BOTH sides. With the guard the later doc survives; the
-    eventual replay of the crashed batch then near-dups against it and
-    is dropped, so the content lands exactly once."""
+    an indexed partner for a DIFFERENT later batch — otherwise the later
+    doc is dropped as the orphan's near-dup while the orphan's text was
+    never committed, losing the content on BOTH sides. No manifest lists
+    the orphan, so the later doc survives; the eventual replay of the
+    crashed batch then near-dups against it and is dropped, so the
+    content lands exactly once."""
     from pyspark_etl_twitter_spark.operators.dedup import (
         build_minhash_index,
         minhash_index_append,
@@ -1485,7 +1470,7 @@ def test_minhash_torn_append_orphan_never_drops_later_batch(spark, tmp_path):
     batch_x = spark.createDataFrame(
         [(110, "d1 d2 d3 d4 d5 d6 d7 d8 d9 d10")], "doc_id long, text string"
     )
-    _tear_append(spark, tmp_path, path, batch_x)
+    _tear_append(monkeypatch, spark, path, batch_x)
 
     # a DIFFERENT batch whose doc near-dups the orphan's text (9/11
     # unigram Jaccard) must SURVIVE: the orphan is not committed
@@ -1512,14 +1497,13 @@ def test_minhash_torn_append_orphan_never_drops_later_batch(spark, tmp_path):
     assert 200 in texts and 110 not in texts  # content landed exactly once
 
 
-def test_minhash_rebuild_on_torn_store_ignores_orphans(spark, tmp_path):
+def test_minhash_rebuild_on_torn_store_ignores_orphans(spark, tmp_path, monkeypatch):
     """r14 ADVICE (medium), rebuild half: a maintenance rebuild of a torn
     store must not cluster orphans — a text-less orphan could otherwise
     become a cluster's canonical (min id) and committed content would be
     dropped in its favor. The rebuild's output and the rewritten tables
-    must contain committed ids only, and the store comes out clean."""
+    must contain committed ids only."""
     from pyspark_etl_twitter_spark.operators.dedup import (
-        _mh_is_clean,
         build_minhash_index,
         rebuild_minhash_index,
     )
@@ -1534,11 +1518,10 @@ def test_minhash_rebuild_on_torn_store_ignores_orphans(spark, tmp_path):
     orphan = spark.createDataFrame(
         [(5, "b1 b2 b3 b4 b5 b6 b7 b8 b9 z7")], "doc_id long, text string"
     )
-    _tear_append(spark, tmp_path, path, orphan)
+    _tear_append(monkeypatch, spark, path, orphan)
 
     kept = {r.doc_id for r in rebuild_minhash_index(spark, path).collect()}
     assert kept == {0, 10, 20}  # committed corpus intact, orphan ignored
-    assert _mh_is_clean(path)
     for sub in ("bands", "sigs", "terms", "texts"):
         ids = {
             r.doc_id

@@ -621,12 +621,14 @@ def test_quantized_index_recall_and_size(spark, tmp_path):
 
 
 def test_lsh_index_without_meta_rejected(spark, tmp_path):
-    """An index missing its ``meta`` table is unsupported, and both probe
-    and append must say so EARLY with a rebuild hint (r5 advice: the
-    documented 'legacy fallback' could never work — the probe joins on
-    the OR-construction t/q_t columns a pre-meta layout lacks, so the
-    old caller-default path died mid-plan with an AnalysisException)."""
-    import shutil
+    """An index missing its manifest (and with it the build parameters,
+    as in any store written before the manifest existed) is unsupported,
+    and both probe and append must say so EARLY with a rebuild hint (r5
+    advice: the documented 'legacy fallback' could never work — the probe
+    joins on the OR-construction t/q_t columns a pre-meta layout lacks,
+    so the old caller-default path died mid-plan with an
+    AnalysisException)."""
+    import os
 
     from pyspark_etl_twitter_spark.operators.similarity import (
         build_lsh_index,
@@ -638,13 +640,12 @@ def test_lsh_index_without_meta_rejected(spark, tmp_path):
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     path = str(tmp_path / "idx")
     build_lsh_index(emb, path, n_planes=4)
-    shutil.rmtree(f"{path}/meta")
+    os.remove(f"{path}/_manifest.json")
     with pytest.raises(ValueError, match="meta table — rebuild"):
         lsh_probe_indexed(spark, path, n_queries=2, k=2)
     with pytest.raises(ValueError, match="meta table — rebuild"):
         lsh_index_append(spark, path, emb.limit(1))
-    # a wholly nonexistent index fails the same way (missing path is the
-    # ONLY exception _read_lsh_meta swallows; real read errors propagate)
+    # a wholly nonexistent index fails the same way
     with pytest.raises(ValueError, match="meta table — rebuild"):
         lsh_probe_indexed(spark, str(tmp_path / "nope"), n_queries=1, k=1)
 
