@@ -10,8 +10,15 @@ behind import-tries — the container has no Delta/Mongo jars.
 
 Scale notes: batch writers partition output by a low-cardinality column
 when given one (partition pruning for downstream readers); foreachBatch
-callbacks must be idempotent on (epoch_id) for exactly-once semantics —
-the epoch is stamped into the output so replays are detectable.
+callbacks must be idempotent on (epoch_id) for exactly-once semantics.
+The parquet foreachBatch sinks get that from ``write_epoch``: each epoch
+overwrites its own ``{path}/epoch_id=N`` directory, so a replayed epoch
+replaces its rows instead of adding a second copy, and
+``spark.read.parquet(path)`` returns ``epoch_id`` as an int partition
+column, last in the schema. A sink directory written by an older version
+of these sinks holds flat part files with an ``epoch_id`` data column;
+it cannot be continued (partition discovery rejects the mixed layout), so
+start such a stream at a fresh path.
 """
 
 from __future__ import annotations
@@ -185,15 +192,26 @@ def foreach_batch_mongo(df: DataFrame, uri: str, database: str, collection: str)
     return df.writeStream.foreachBatch(write_batch).start()
 
 
+def write_epoch(batch_df: DataFrame, path: str, epoch_id: int) -> None:
+    """Write one foreachBatch epoch to its own ``{path}/epoch_id=N``
+    directory, replacing whatever an earlier attempt of the epoch left.
+
+    The epoch lives in the directory name, not in the plan: a
+    ``lit(epoch_id)`` column is written into the generated Java source, so
+    every epoch would miss Spark's compiled-code cache and recompile its
+    whole-stage classes. With no per-epoch expression the plan is the same
+    each batch and the classes compiled for the first one are reused."""
+    batch_df.write.mode("overwrite").parquet(f"{path}/epoch_id={epoch_id}")
+
+
 def foreach_batch_parquet(df: DataFrame, path: str, checkpoint: str):
-    """Generic exactly-once-auditable foreachBatch sink: epoch stamped,
-    checkpointed — the engine's stand-in for Delta/Mongo in tests."""
-
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.withColumn("epoch_id", F.lit(epoch_id)).write.mode("append").parquet(path)
-
+    """Generic exactly-once foreachBatch sink: one directory per epoch
+    (``write_epoch``), checkpointed — the engine's stand-in for
+    Delta/Mongo in tests."""
     return (
-        df.writeStream.foreachBatch(write_batch)
+        df.writeStream.foreachBatch(
+            lambda batch_df, epoch_id: write_epoch(batch_df, path, epoch_id)
+        )
         .option("checkpointLocation", checkpoint)
         .start()
     )

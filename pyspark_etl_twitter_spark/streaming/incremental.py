@@ -29,6 +29,7 @@ from pyspark_etl_twitter_spark.operators.indexstore import (
     require_local_path,
     swap_pointer,
 )
+from pyspark_etl_twitter_spark.sources.sinks import write_epoch
 
 
 def _run_available_now(
@@ -214,7 +215,9 @@ def streaming_dsir_score(
     (``dsir_score_with`` inside foreachBatch), so there is no streaming
     state beyond the broadcast B-row table, and replaying a batch under
     the checkpoint recomputes identical weights (deterministic md5
-    features). Scores append with the epoch stamped for replay audit."""
+    features). Each epoch's scores overwrite its own
+    ``out_path/epoch_id=N`` directory (``sinks.write_epoch``), so a
+    replayed epoch replaces its rows."""
     from pyspark_etl_twitter_spark.operators.importance import dsir_score_with
     from pyspark_etl_twitter_spark.streaming.pipeline import (
         DOCUMENTS_STREAM_SCHEMA,
@@ -225,11 +228,7 @@ def streaming_dsir_score(
 
     def score_batch(batch_df: DataFrame, epoch_id: int) -> None:
         scored = dsir_score_with(batch_df, model, n_buckets=n_buckets)
-        (
-            scored.withColumn("epoch_id", F.lit(epoch_id))
-            .write.mode("append")
-            .parquet(out_path)
-        )
+        write_epoch(scored, out_path, epoch_id)
 
     _run_available_now(stream, checkpoint_dir, timeout_s, score_batch)
 
@@ -257,8 +256,8 @@ def streaming_containment_score(
     (deterministic shingle algebra). Every batch doc is emitted —
     non-matching docs score 0.0 with a NULL best_eval_id — so a
     downstream ``max_containment < tau`` keep-filter sees the whole
-    batch; the epoch is stamped for replay audit (the
-    ``streaming_dsir_score`` contract)."""
+    batch; each epoch overwrites its own ``out_path/epoch_id=N``
+    directory (the ``streaming_dsir_score`` contract)."""
     from pyspark_etl_twitter_spark.operators.curation import (
         containment_contamination,
     )
@@ -283,9 +282,8 @@ def streaming_containment_score(
                 ),
                 "best_eval_id",
             )
-            .withColumn("epoch_id", F.lit(epoch_id))
         )
-        out.write.mode("append").parquet(out_path)
+        write_epoch(out, out_path, epoch_id)
 
     _run_available_now(stream, checkpoint_dir, timeout_s, score_batch)
 

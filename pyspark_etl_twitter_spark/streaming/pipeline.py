@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pyspark_etl_twitter_spark.operators.sentiment import score_documents
+from pyspark_etl_twitter_spark.sources.sinks import write_epoch
 
 EVENTS_STREAM_SCHEMA = T.StructType(
     [
@@ -113,17 +114,15 @@ def score_stream_foreach_batch(
 ):
     """Streaming sentiment scoring via foreachBatch — the consumer_delta /
     consumer_mongo pattern (S6/S7) with the defects fixed: the callback
-    takes (batch_df, epoch_id) and stamps the epoch for idempotent replay
-    auditing. Per micro-batch, the *batch* scoring plan runs unchanged
-    (stream-static broadcast join)."""
+    takes (batch_df, epoch_id) and writes each epoch to its own
+    ``out_path/epoch_id=N`` directory (``sinks.write_epoch``), so a
+    replayed epoch overwrites its rows and the output stays exactly-once.
+    Per micro-batch, the *batch* scoring plan runs unchanged
+    (stream-static broadcast join), and since no expression in it carries
+    the epoch, every batch after the first reuses its compiled code."""
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        scored = score_documents(batch_df, weights)
-        (
-            scored.withColumn("epoch_id", F.lit(epoch_id))
-            .write.mode("append")
-            .parquet(out_path)
-        )
+        write_epoch(score_documents(batch_df, weights), out_path, epoch_id)
 
     return (
         doc_stream.writeStream.foreachBatch(write_batch)
@@ -203,14 +202,14 @@ def streaming_score_throughput(
         # exact by construction — avoids re-running the explode just to count
         total = docs.count() * replicate
 
-        # batch count is tracked inside the callback: recentProgress caps
-        # at ~100 entries, so replays with many triggers (large n_files /
-        # small max_files_per_trigger) would undercount from progress
+        # batches are counted in the callback: recentProgress caps at ~100
+        # entries, and a stateless file-source query calls foreachBatch
+        # only when new files arrived — every replay file holds rows, so
+        # every call is a batch with data
         n_batches = [0]
 
         def _score_batch(batch_df: DataFrame, _epoch: int) -> None:
-            if not batch_df.isEmpty():
-                n_batches[0] += 1
+            n_batches[0] += 1
             score_documents(batch_df, weights).write.format("noop").mode(
                 "overwrite"
             ).save()

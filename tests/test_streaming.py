@@ -2,7 +2,10 @@
 must equal the batch path — the plan is the same; only the source binding
 differs."""
 
+import ast
 import os
+import threading
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -12,6 +15,7 @@ from pyspark_etl_twitter_spark.operators.sentiment import (
     score_documents,
 )
 from pyspark_etl_twitter_spark.sources.catalog import load_table
+from pyspark_etl_twitter_spark.sources.sinks import foreach_batch_parquet
 from pyspark_etl_twitter_spark.streaming.pipeline import (
     replay_to_json,
     score_stream_foreach_batch,
@@ -136,6 +140,118 @@ def test_stream_scoring_equals_batch(spark, docs_replay_dir, tmp_path):
     assert epochs >= 2  # multiple micro-batches actually ran
 
 
+def test_stream_scoring_replay_after_crash_is_exactly_once(
+    spark, docs_replay_dir, tmp_path
+):
+    """A crash after the sink write and before the commit-log entry
+    replays the epoch on restart; it overwrites its own ``epoch_id=N``
+    directory, so every doc is in the sink once, scored as the batch
+    path scores it."""
+    docs = load_table(spark, SF_TINY, "documents")
+    weights = build_weight_table(docs)
+    out = str(tmp_path / "scored")
+    ckpt = str(tmp_path / "ckpt")
+
+    def run() -> None:
+        stream = stream_documents(spark, docs_replay_dir, max_files_per_trigger=2)
+        q = score_stream_foreach_batch(stream, weights, out, ckpt)
+        q.processAllAvailable()
+        q.stop()
+
+    run()
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    assert last >= 1  # two micro-batches ran
+    for name in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+    run()
+    assert os.path.exists(os.path.join(commits, str(last)))  # the replay committed
+
+    got = spark.read.parquet(out).groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n"), F.first("prediction").alias("prediction")
+    )
+    assert got.filter(F.col("n") != 1).count() == 0
+    got = {r.doc_id: r.prediction for r in got.collect()}
+    want = {r.doc_id: r.prediction for r in score_documents(docs, weights).collect()}
+    assert got == want
+
+
+@pytest.mark.parametrize(
+    "start",
+    [
+        score_stream_foreach_batch,
+        lambda stream, _weights, out, ckpt: foreach_batch_parquet(stream, out, ckpt),
+    ],
+    ids=["score_stream_foreach_batch", "foreach_batch_parquet"],
+)
+def test_foreach_batch_sinks_reuse_compiled_code(spark, tmp_path, start):
+    """No expression of a sink's per-batch plan carries the epoch, so after
+    two warm-up micro-batches the next three compile no Java class: each
+    reuses the classes cached under the same generated source."""
+    src = load_table(spark, SF_TINY, "documents")
+    docs = src.orderBy("doc_id").toPandas()
+    weights = build_weight_table(src)
+    watch, staged = tmp_path / "watch", tmp_path / "staged"
+    watch.mkdir()
+    staged.mkdir()
+    out = str(tmp_path / "sink")
+    query = start(stream_documents(spark, str(watch)), weights, out, str(tmp_path / "ckpt"))
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    try:
+        for i in range(5):
+            if i == 2:
+                warm = compiled.METRIC_COMPILATION_TIME().getCount()
+            chunk = staged / f"batch_{i}.json"
+            docs.iloc[i * 20 : (i + 1) * 20].to_json(chunk, orient="records", lines=True)
+            chunk.rename(watch / chunk.name)
+            query.processAllAvailable()
+        steady = compiled.METRIC_COMPILATION_TIME().getCount() - warm
+    finally:
+        query.stop()
+    assert steady == 0
+    assert spark.read.parquet(out).select("epoch_id").distinct().count() == 5
+
+
+def _epoch_stamps(tree: ast.AST):
+    """Lines that put the epoch into a plan: ``withColumn("epoch_id", …)``
+    or ``lit(epoch_id)``."""
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        name = getattr(node.func, "attr", getattr(node.func, "id", None))
+        if name == "withColumn" and node.args:
+            first = node.args[0]
+            if isinstance(first, ast.Constant) and first.value == "epoch_id":
+                yield node.lineno
+        elif name == "lit" and any(
+            isinstance(a, ast.Name) and a.id == "epoch_id" for a in node.args
+        ):
+            yield node.lineno
+
+
+def test_epochs_are_written_only_through_write_epoch():
+    """foreachBatch writers put the epoch in the directory name
+    (``sinks.write_epoch``), never in the plan, where a per-epoch literal
+    recompiles the batch's code every epoch. The gated Delta sink is the
+    one exception: a Delta table cannot take per-epoch sub-paths."""
+    package = Path(__file__).resolve().parents[1] / "pyspark_etl_twitter_spark"
+    stray = []
+    for file in sorted(package.rglob("*.py")):
+        rel = file.relative_to(package)
+        tree = ast.parse(file.read_text(), filename=str(file))
+        allowed = range(0)
+        if rel == Path("sources/sinks.py"):
+            delta = next(
+                n
+                for n in ast.walk(tree)
+                if isinstance(n, ast.FunctionDef) and n.name == "foreach_batch_delta"
+            )
+            allowed = range(delta.lineno, delta.end_lineno + 1)
+        stray += [f"{rel}:{line}" for line in _epoch_stamps(tree) if line not in allowed]
+    assert stray == []
+
+
 def test_streaming_content_dedup(spark, docs_replay_dir, tmp_path):
     """Replaying every doc file twice must yield one row per distinct TEXT
     (content dedup, not id dedup — planted duplicate texts collapse too)."""
@@ -211,22 +327,52 @@ def test_chained_stateful_aggregation_matches_batch(spark, events_tiny, events_r
 
 def test_streaming_score_throughput_smoke(spark, tmp_path):
     """The bench's S1→M5 throughput row: replayed corpus drains fully,
-    every row is scored exactly once, and the figure is positive."""
+    every row is scored exactly once, the figure is positive, and the
+    batch count is the number of batches that read rows, as the query's
+    progress reports them."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
     from pyspark_etl_twitter_spark.streaming.pipeline import (
         streaming_score_throughput,
     )
 
-    res = streaming_score_throughput(
-        spark,
-        SF_TINY,
-        replicate=2,
-        n_files=3,
-        max_files_per_trigger=1,
-        tmp_root=str(tmp_path),
-    )
+    data_batches, bench_ids, ended = set(), set(), threading.Event()
+
+    class _Progress(StreamingQueryListener):
+        def onQueryStarted(self, event) -> None:
+            pass
+
+        def onQueryProgress(self, event) -> None:
+            p = event.progress
+            if p.name == "throughput_bench":
+                bench_ids.add(p.id)
+                if p.numInputRows > 0:
+                    data_batches.add(p.batchId)
+
+        def onQueryIdle(self, event) -> None:
+            pass
+
+        def onQueryTerminated(self, event) -> None:
+            if event.id in bench_ids:
+                ended.set()
+
+    listener = _Progress()
+    spark.streams.addListener(listener)
+    try:
+        res = streaming_score_throughput(
+            spark,
+            SF_TINY,
+            replicate=2,
+            n_files=3,
+            max_files_per_trigger=1,
+            tmp_root=str(tmp_path),
+        )
+        assert ended.wait(60)  # every progress event of the query arrived
+    finally:
+        spark.streams.removeListener(listener)
     n_docs = spark.read.parquet(f"{SF_TINY}/documents.parquet").count()
     assert res["rows"] == 2 * n_docs
-    assert res["batches"] >= 2
+    assert res["batches"] == len(data_batches) == 3
     assert res["rows_per_sec"] > 0
 
 
