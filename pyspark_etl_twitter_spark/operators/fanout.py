@@ -31,7 +31,20 @@ Site audit (why each remaining unconditional ``fan_out`` is justified —
 the downstream aggregate/dedup groups by id, so the id exchange REPLACES
 a strictly larger exploded-row exchange):
 
-- ``sentiment.py`` score paths      → ``groupBy(id, term)``
+- ``sentiment.py`` fit_and_score    → ``groupBy(id, term)``
+- ``sentiment.py`` score_documents  → ``groupBy(id, term)``, size-gated
+  through ``fan_out_unless_small``: below ``SINGLE_TASK_BYTES`` of
+  plan-estimated input (a paced stream micro-batch) the exchange's job
+  costs more than the cores it buys. Warm ``local[4]``, one JSON file
+  scored to ``noop``, median of 5, wall ms / JVM CPU-s::
+
+      input                 fan_out       coalesce(1)
+      100 rows, 37 KB       539 / 1.20    489 / 0.85
+      300 rows, 111 KB      538 / 1.09    571 / 0.99
+      1,000 rows, 363 KB    666 / 1.14    681 / 1.03
+      2,000 rows, 727 KB    587 / 1.23    761 / 1.23
+      5,000 rows, 1.8 MB    779 / 2.07    1,334 / 1.62
+
 - ``dedup.py`` _distinct_terms      → ``dropDuplicates([id, term])``
 - ``dedup.py`` simhash_fingerprints → ``groupBy(id, term)`` then ``groupBy(id)``
 - ``textstats.py`` fingerprints / repetition / tf-idf / char-entropy /
@@ -45,12 +58,19 @@ a strictly larger exploded-row exchange):
   satisfies partition-locally
 - ``encoding.py`` encode_documents  → order re-assembly ``groupBy(id)``
 
-DESIGN.md §18 carries the same table with measurements.
+DESIGN.md §19 (the AQE-coalesced fan-out finding) carries the same
+table with measurements.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+
+#: Plan-estimated input bytes below which ``fan_out_unless_small`` runs
+#: the input in one task. It sits under the measured wall-time crossover
+#: (between 111 KB and 727 KB of JSON, module docstring), so sf0.1
+#: ``documents`` (595 KB) keeps its fan-out.
+SINGLE_TASK_BYTES = 128 * 1024
 
 
 def _shuffle_width(df: DataFrame) -> int:
@@ -73,3 +93,24 @@ def fan_out_if_narrow(df: DataFrame, *keys) -> DataFrame:
     if df.rdd.getNumPartitions() < df.sparkSession.sparkContext.defaultParallelism:
         return fan_out(df, *keys)
     return df
+
+
+def plan_bytes(df: DataFrame) -> int:
+    """The optimizer's size estimate of ``df`` in bytes. File scans sum
+    their file sizes, so this runs no Spark job; a filter keeps its
+    child's size, a ``localCheckpoint`` keeps its source plan's, and an
+    RDD-backed input of unknown size reports ``Long.MaxValue``."""
+    stats = df._jdf.queryExecution().optimizedPlan().stats()
+    return int(stats.sizeInBytes())
+
+
+def fan_out_unless_small(df: DataFrame, *keys) -> DataFrame:
+    """``coalesce(1)`` when ``df`` is estimated below ``SINGLE_TASK_BYTES``,
+    else ``fan_out``. A single partition satisfies every downstream
+    clustering on ``keys``, so a small input runs with no exchange at all
+    and writes one file; a large or unknown-size input keeps the fan-out,
+    as does a streaming DataFrame, which has no estimate until a
+    micro-batch binds it (the plan cannot be optimized before ``start``)."""
+    if not df.isStreaming and plan_bytes(df) < SINGLE_TASK_BYTES:
+        return df.coalesce(1)
+    return fan_out(df, *keys)

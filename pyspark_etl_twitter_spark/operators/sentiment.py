@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from pyspark_etl_twitter_spark.operators.fanout import fan_out
+from pyspark_etl_twitter_spark.operators.fanout import fan_out, fan_out_unless_small
 
 from pyspark_etl_twitter_spark.functions.lits import local_table
 from pyspark_etl_twitter_spark.functions.text import remove_stopwords, tokenize
@@ -137,10 +137,13 @@ def score_documents(
     final aggregate and no join-back is needed — the whole pipeline is one
     doc-id shuffle end to end (their margin is the bare intercept,
     mirroring MLlib's empty-vector dot product).
+
+    A small input (``fanout.SINGLE_TASK_BYTES``, a paced stream
+    micro-batch) runs in one task instead: no exchange, one output file.
     """
     toks = tokens_column(text_col, stop=stop, reference_clean=reference_clean)
     tf = (
-        fan_out(documents, F.col(id_col))
+        fan_out_unless_small(documents, F.col(id_col))
         .select(F.col(id_col), F.explode_outer(toks).alias("term"))
         .groupBy(id_col, "term")
         .agg(F.count(F.lit(1)).alias("tf"))

@@ -1,9 +1,12 @@
+from pathlib import Path
+
 import pytest
 
 from pyspark_etl_twitter_spark.session import get_session
 
 SF_TINY = "/root/testdata/sf0.001"
 SF_SMALL = "/root/testdata/sf0.01"
+SF_BENCH = str(Path(SF_TINY).with_name("sf0.1"))  # the scale bench.py runs
 
 
 @pytest.fixture(scope="session")

@@ -5,11 +5,13 @@ differs."""
 import ast
 import os
 import threading
+import time
 from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
+from pyspark_etl_twitter_spark.operators.fanout import SINGLE_TASK_BYTES, plan_bytes
 from pyspark_etl_twitter_spark.operators.sentiment import (
     build_weight_table,
     score_documents,
@@ -28,7 +30,7 @@ from pyspark_etl_twitter_spark.streaming.windows import (
     streaming_dedup,
     tumbling_counts,
 )
-from tests.conftest import SF_TINY
+from tests.conftest import SF_BENCH, SF_TINY
 
 
 @pytest.fixture(scope="module")
@@ -211,6 +213,80 @@ def test_foreach_batch_sinks_reuse_compiled_code(spark, tmp_path, start):
         query.stop()
     assert steady == 0
     assert spark.read.parquet(out).select("epoch_id").distinct().count() == 5
+
+
+def _stream_thread_cpu_s(spark, name: str) -> float:
+    """CPU seconds of the JVM thread running the query named ``name``."""
+    mx = spark._jvm.java.lang.management.ManagementFactory.getThreadMXBean()
+    for tid in mx.getAllThreadIds():
+        info = mx.getThreadInfo(tid)
+        if info is not None and info.getThreadName().startswith(
+            f"stream execution thread for {name}"
+        ):
+            return mx.getThreadCpuTime(tid) / 1e9
+    raise AssertionError(f"no stream execution thread for {name}")
+
+
+def test_idle_stream_stays_cheap(spark, tmp_path):
+    """A default-trigger query on an empty directory re-lists it after
+    every polling delay; at the session's 100 ms delay its stream thread
+    burns well under the ~0.3 CPU-s per second of the stock 10 ms."""
+    src = load_table(spark, SF_TINY, "documents")
+    watch = tmp_path / "watch"
+    watch.mkdir()
+    query = score_stream_foreach_batch(
+        stream_documents(spark, str(watch)),
+        build_weight_table(src),
+        str(tmp_path / "sink"),
+        str(tmp_path / "ckpt"),
+    )
+    try:
+        time.sleep(1.5)
+        before = _stream_thread_cpu_s(spark, "score_stream")
+        time.sleep(3.0)
+        per_s = (_stream_thread_cpu_s(spark, "score_stream") - before) / 3.0
+    finally:
+        query.stop()
+    assert per_s < 0.15
+
+
+def test_small_batch_scores_in_one_task(spark, tmp_path):
+    """A 100-row micro-batch is below ``SINGLE_TASK_BYTES``: it runs the
+    weight broadcast and the write (2 jobs, no fan-out shuffle job) and
+    writes one part file."""
+    src = load_table(spark, SF_TINY, "documents")
+    docs = src.orderBy("doc_id").toPandas()
+    weights = build_weight_table(src).localCheckpoint()
+    watch, staged = tmp_path / "watch", tmp_path / "staged"
+    watch.mkdir()
+    staged.mkdir()
+    out = tmp_path / "sink"
+    query = score_stream_foreach_batch(
+        stream_documents(spark, str(watch)), weights, str(out), str(tmp_path / "ckpt")
+    )
+    tracker = spark.sparkContext.statusTracker()
+    try:
+        for i in range(2):  # the second batch is the one measured
+            before = set(tracker.getJobIdsForGroup(str(query.runId)))
+            chunk = staged / f"batch_{i}.json"
+            docs.iloc[i * 100 : (i + 1) * 100].to_json(chunk, orient="records", lines=True)
+            chunk.rename(watch / chunk.name)
+            query.processAllAvailable()
+        jobs = set(tracker.getJobIdsForGroup(str(query.runId))) - before
+    finally:
+        query.stop()
+    assert len(jobs) == 2
+    parts = [f for f in os.listdir(out / "epoch_id=1") if f.startswith("part-")]
+    assert len(parts) == 1
+
+
+def test_batch_scale_scoring_keeps_fan_out(spark):
+    """sf0.1 ``documents`` (595 KB) is above ``SINGLE_TASK_BYTES`` and keeps
+    the doc-id fan-out exchange."""
+    docs = load_table(spark, SF_BENCH, "documents")
+    assert plan_bytes(docs) >= SINGLE_TASK_BYTES
+    plan = score_documents(docs, build_weight_table(docs))._jdf.queryExecution()
+    assert "Exchange hashpartitioning(doc_id" in plan.executedPlan().toString()
 
 
 def _epoch_stamps(tree: ast.AST):
