@@ -356,6 +356,20 @@ def idle_gate_check(samples: list[float]) -> dict:
     }
 
 
+def warm_median(action, warmup: int, reps: int) -> float:
+    """Seconds one call of ``action`` takes: ``warmup`` untimed calls, then
+    the median of ``max(1, reps)`` timed ones, rounded to the millisecond.
+    The one timing loop of the bench rows and of ``tools/measure.py``."""
+    for _ in range(warmup):
+        action()
+    times = []
+    for _ in range(max(1, reps)):
+        start = time.perf_counter()
+        action()
+        times.append(time.perf_counter() - start)
+    return round(sorted(times)[len(times) // 2], 3)
+
+
 def canary_sample(spark) -> tuple[float, float]:
     """One (jvm_sec, py_sec) sample of the two deterministic reference
     ops. Plan-free and data-free by construction: the JVM op is a fixed
@@ -513,14 +527,11 @@ def main() -> None:
         # continues — a single regression must never cost the whole bench.
         rerun_thunks[name] = thunk
         try:
-            for _ in range(warmup if n_warmup is None else n_warmup):
-                thunk().write.format("noop").mode("overwrite").save()
-            times = []
-            for _ in range(max(1, reps if n_reps is None else n_reps)):
-                start = time.perf_counter()
-                thunk().write.format("noop").mode("overwrite").save()
-                times.append(time.perf_counter() - start)
-            timings[name] = round(sorted(times)[len(times) // 2], 3)
+            timings[name] = warm_median(
+                lambda: thunk().write.format("noop").mode("overwrite").save(),
+                warmup if n_warmup is None else n_warmup,
+                reps if n_reps is None else n_reps,
+            )
         except Exception as exc:  # noqa: BLE001
             timings[name] = None
             errors[name] = f"{type(exc).__name__}: {exc}"[:300]
@@ -749,13 +760,7 @@ def main() -> None:
     build_probe_split: dict[str, dict] = {}
 
     def _timed_stage(fn) -> float:
-        fn()  # warm (codegen + file listing off the clock)
-        ts = []
-        for _ in range(max(1, reps)):
-            t0 = time.perf_counter()
-            fn()
-            ts.append(time.perf_counter() - t0)
-        return round(sorted(ts)[len(ts) // 2], 3)
+        return warm_median(fn, 1, reps)  # warm: codegen + file listing off the clock
 
     try:
         from pyspark_etl_twitter_spark.operators.dedup import (
@@ -1163,14 +1168,11 @@ def main() -> None:
         if thunk is None:
             continue
         try:
-            thunk().write.format("noop").mode("overwrite").save()  # re-warm
-            ts = []
-            for _ in range(max(1, reps)):
-                t0 = time.perf_counter()
-                thunk().write.format("noop").mode("overwrite").save()
-                ts.append(time.perf_counter() - t0)
+            rerun = warm_median(  # one re-warm rep first
+                lambda: thunk().write.format("noop").mode("overwrite").save(), 1, reps
+            )
             queries_first_pass[name] = timings[name]
-            timings[name] = round(sorted(ts)[len(ts) // 2], 3)
+            timings[name] = rerun
             print(
                 f"bench: rerun {name}: ratio {ratio:.2f} -> "
                 f"{timings[name]}s (first pass {queries_first_pass[name]}s)",

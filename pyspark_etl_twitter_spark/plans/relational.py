@@ -566,8 +566,8 @@ def sessionize_chunked(
     row-level window partitions by (user, time chunk) so one zipfian user
     holding 20% of the corpus no longer serializes 20% of the work into
     one window partition (AQE skew handling splits joins, never windows —
-    this is the wired fallback the skew harness measures,
-    tools/scale_evidence_r5.py).
+    this is the wired fallback the skew harness measured,
+    ``git show bc6cf72:tools/scale_evidence_r5.py``).
 
     Same boundary trick as ``rolling_range_mean_chunked``: sessions are
     computed locally per chunk, then chunk-local session PIECES (one row
