@@ -250,7 +250,7 @@ def fuzzy_name_pairs(
     smaller than a 100 TB fact table), and equi-join on a blocking key so
     the quadratic comparison runs per block, never corpus-wide. Oversized
     blocks are the residual hazard — tighten the key (add a length band)
-    or reuse the LSH star guard from ``lsh_candidate_pairs``."""
+    or reuse the LSH star guard from ``dedup._band_candidates``."""
     names = (
         df.select(F.col(name_col).alias("name"))
         .distinct()

@@ -158,6 +158,23 @@ def ngram_jaccard_pairs(
 # MinHash + LSH
 # --------------------------------------------------------------------------
 
+def _xxhash_term(term: Column, i: int) -> Column:
+    return F.xxhash64(F.lit(i), term)
+
+
+def _min_hashes(terms: DataFrame, num_hashes: int, term_hash) -> DataFrame:
+    """(_id, h0..h{k-1}) MinHash signatures of a ``_distinct_terms``
+    relation under the seeded family ``term_hash(term, i)`` — xxhash64 for
+    the scale path, md5 (``portable_term_hash``) for the DuckDB-verifiable
+    twins and the persisted store. One map-side-combined groupBy(id) with
+    k min-aggregates: the shuffle carries k longs per doc, independent of
+    doc length."""
+    mins = [
+        F.min(term_hash(F.col("term"), i)).alias(f"h{i}") for i in range(num_hashes)
+    ]
+    return terms.groupBy("_id").agg(*mins)
+
+
 def minhash_signatures(
     docs: DataFrame,
     *,
@@ -166,15 +183,82 @@ def minhash_signatures(
     num_hashes: int = 32,
     shingle_n: int = 3,
 ) -> DataFrame:
-    """(id, h0..h{k-1}) min-hash signature via k seeded xxhash64 families.
-    One explode + one map-side-combined groupBy(id) with k min-aggregates —
-    the shuffle carries k longs per doc, independent of doc length."""
+    """(minhash_id, h0..h{k-1}) min-hash signature via k seeded xxhash64
+    families (``_min_hashes``)."""
     terms = _distinct_terms(docs, id_col, text_col, shingle_n)
-    mins = [
-        F.min(F.xxhash64(F.lit(i), F.col("term"))).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    return terms.groupBy("_id").agg(*mins).withColumnRenamed("_id", "minhash_id")
+    return _min_hashes(terms, num_hashes, _xxhash_term).withColumnRenamed(
+        "_id", "minhash_id"
+    )
+
+
+def _bands(sigs: DataFrame, num_hashes: int, bands: int, band_key) -> DataFrame:
+    """(_id, band_id, band_key) band rows of a signature relation: band
+    j's key is ``band_key`` over its ``num_hashes // bands`` signature
+    columns (xxhash64 of them, or ``_portable_band_key``)."""
+    rows = num_hashes // bands
+    keys = F.array(
+        *[
+            band_key(*[F.col(f"h{j * rows + r}") for r in range(rows)])
+            for j in range(bands)
+        ]
+    )
+    return sigs.select("_id", F.posexplode(keys).alias("band_id", "band_key"))
+
+
+def _band_candidates(
+    rows: DataFrame, star: int | None, new: str | None = None
+) -> DataFrame:
+    """(doc_a < doc_b) candidate pairs of band rows (_id, band_id,
+    band_key[, new]): docs agreeing on all rows of any band. The one band
+    join under every MinHash path — the xxhash64 and md5 pair flows, the
+    store append and the store rebuild — so append candidates ≡ rebuild
+    candidates by construction. The band-key join is the only shuffle.
+
+    Bucket skew is THE hazard at scale: a swarm of n near-identical
+    documents (template spam, boilerplate) lands in one bucket and a naive
+    self-join emits n²/2 pairs — measured as an executor OOM at a 100-doc
+    clique × 500 swarms on a 100× replicated corpus. Exact-dedup-first only
+    collapses byte-identical swarms, not near-identical ones. Buckets
+    larger than ``star`` therefore emit a STAR instead: every member pairs
+    with the bucket's min doc id only — O(n) edges whose connected
+    components (what downstream clustering consumes) are IDENTICAL to the
+    clique's. The tradeoff is pair-level recall inside oversized buckets
+    (member↔member edges are not listed/verified individually); ``None``
+    disables the guard. The bucket-stats window runs over the same
+    (band, key) shuffle the join needs anyway.
+
+    ``new`` names a boolean column marking batch rows (the store append's
+    probe, whose buckets hold the batch plus the stored members of the
+    buckets it touches): only pairs touching a batch row are kept — a
+    bucket pair with either side new, a star edge whose member or hub is
+    new — before the ``distinct``."""
+    from pyspark.sql import Window
+
+    if star is not None:
+        w = Window.partitionBy("band_id", "band_key")
+        hub = F.min(F.struct("_id", new) if new else F.col("_id")).over(w)
+        rows = rows.withColumn("_bsz", F.count(F.lit(1)).over(w)).withColumn(
+            "_bmin", hub
+        )
+        hub_id = F.col("_bmin._id") if new else F.col("_bmin")
+        spokes = rows.filter((F.col("_bsz") > star) & (F.col("_id") != hub_id))
+        if new:
+            spokes = spokes.filter(F.col(new) | F.col(f"_bmin.{new}"))
+        spokes = spokes.select(hub_id.alias("doc_a"), F.col("_id").alias("doc_b"))
+        rows = rows.filter(F.col("_bsz") <= star)
+    a, b = rows.alias("a"), rows.alias("b")
+    pairs = a.join(
+        b,
+        (F.col("a.band_id") == F.col("b.band_id"))
+        & (F.col("a.band_key") == F.col("b.band_key"))
+        & (F.col("a._id") < F.col("b._id")),
+    )
+    if new:
+        pairs = pairs.filter(F.col(f"a.{new}") | F.col(f"b.{new}"))
+    pairs = pairs.select(F.col("a._id").alias("doc_a"), F.col("b._id").alias("doc_b"))
+    if star is not None:
+        pairs = pairs.union(spokes)
+    return pairs.distinct()
 
 
 def lsh_candidate_pairs(
@@ -184,61 +268,14 @@ def lsh_candidate_pairs(
     bands: int = 8,
     star_bucket_threshold: int | None = 64,
 ) -> DataFrame:
-    """Banded LSH: docs agreeing on all rows of any band become candidates.
-    Band hash join is the only shuffle.
-
-    Bucket skew is THE hazard at scale: a swarm of n near-identical
-    documents (template spam, boilerplate) lands in one bucket and a naive
-    self-join emits n²/2 pairs — measured as an executor OOM at a 100-doc
-    clique × 500 swarms on a 100× replicated corpus. Exact-dedup-first only
-    collapses byte-identical swarms, not near-identical ones. Buckets
-    larger than ``star_bucket_threshold`` therefore emit a STAR instead:
-    every member pairs with the bucket's min doc id only — O(n) edges whose
-    connected components (what downstream clustering consumes) are
-    IDENTICAL to the clique's. The tradeoff is pair-level recall inside
-    oversized buckets (member↔member edges are not listed/verified
-    individually); pass ``None`` to disable. The bucket-stats window runs
-    over the same (band, hash) shuffle the join needs anyway."""
-    from pyspark.sql import Window
-
-    rows = num_hashes // bands
-    band_hashes = F.array(
-        *[
-            F.xxhash64(*[F.col(f"h{j * rows + r}") for r in range(rows)])
-            for j in range(bands)
-        ]
+    """Banded LSH over ``minhash_signatures``: docs agreeing on all rows
+    of any band become candidates, buckets larger than
+    ``star_bucket_threshold`` emit a star (``_band_candidates``); pass
+    ``None`` to disable the guard."""
+    sigs = signatures.withColumnRenamed("minhash_id", "_id")
+    return _band_candidates(
+        _bands(sigs, num_hashes, bands, F.xxhash64), star_bucket_threshold
     )
-    exploded = signatures.select(
-        F.col("minhash_id"), F.posexplode(band_hashes).alias("band_id", "band_hash")
-    )
-    if star_bucket_threshold is not None:
-        w = Window.partitionBy("band_id", "band_hash")
-        exploded = (
-            exploded.withColumn("_bsz", F.count(F.lit(1)).over(w))
-            .withColumn("_bmin", F.min("minhash_id").over(w))
-        )
-        small = exploded.filter(F.col("_bsz") <= star_bucket_threshold)
-        star = (
-            exploded.filter(
-                (F.col("_bsz") > star_bucket_threshold)
-                & (F.col("minhash_id") != F.col("_bmin"))
-            )
-            .select(F.col("_bmin").alias("doc_a"), F.col("minhash_id").alias("doc_b"))
-        )
-    else:
-        small, star = exploded, None
-    a, b = small.alias("a"), small.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.band_id") == F.col("b.band_id"))
-        & (F.col("a.band_hash") == F.col("b.band_hash"))
-        & (F.col("a.minhash_id") < F.col("b.minhash_id")),
-    ).select(
-        F.col("a.minhash_id").alias("doc_a"), F.col("b.minhash_id").alias("doc_b")
-    )
-    if star is not None:
-        pairs = pairs.union(star)
-    return pairs.distinct()
 
 
 def near_dup_pairs_minhash(
@@ -318,50 +355,10 @@ def portable_term_hash(term: Column, i: int) -> Column:
     ).cast("long")
 
 
-def _portable_sigs_from_terms(terms: DataFrame, num_hashes: int) -> DataFrame:
-    """(_id, h0..h{k-1}) portable-MinHash signatures from a
-    ``_distinct_terms`` relation — the md5 twin of
-    ``minhash_signatures``, split out so the persisted-index lifecycle
-    can materialize signatures ONCE and derive band rows, the
-    signature-estimate prefilter, and maintenance rebuilds from the same
-    relation."""
-    mins = [
-        F.min(portable_term_hash(F.col("term"), i)).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    return terms.groupBy("_id").agg(*mins)
-
-
-def _bands_from_sigs(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    """(_id, band_id, band_key) band rows from a portable signature
-    relation. Band key = decimal-rendered row hashes joined with '|' —
-    identical string on both engines."""
-    rows = num_hashes // bands
-    band_keys = F.array(
-        *[
-            F.concat_ws(
-                "|", *[F.col(f"h{j * rows + r}").cast("string") for r in range(rows)]
-            )
-            for j in range(bands)
-        ]
-    )
-    return sigs.select(
-        "_id", F.posexplode(band_keys).alias("band_id", "band_key")
-    )
-
-
-def _portable_bands_from_terms(
-    terms: DataFrame, num_hashes: int, bands: int
-) -> DataFrame:
-    """(_id, band_id, band_key) band rows from a ``_distinct_terms``
-    relation under the md5 ``portable_term_hash`` family — the shared
-    signature→band stage of ``near_dup_pairs_minhash_portable`` and the
-    persisted ``build_minhash_index`` / ``minhash_index_append``
-    lifecycle (so batch probes and full rebuilds hash identically by
-    construction)."""
-    return _bands_from_sigs(
-        _portable_sigs_from_terms(terms, num_hashes), num_hashes, bands
-    )
+def _portable_band_key(*hashes: Column) -> Column:
+    """Band key of the md5 family: decimal-rendered row hashes joined
+    with '|' — identical string on both engines."""
+    return F.concat_ws("|", *[h.cast("string") for h in hashes])
 
 
 def _sig_match_estimate(num_hashes: int) -> Column:
@@ -398,39 +395,12 @@ def near_dup_pairs_minhash_portable(
     ~2-3× the per-term cost of xxhash64, so the xxhash64 path stays the
     scale default; this is its fully-verified twin (the pattern proved by
     the semantic-dedup oracle, plans/advanced_queries.py)."""
-    from pyspark.sql import Window
-
     terms = _distinct_terms(docs, id_col, text_col, shingle_n)
-    exploded = _portable_bands_from_terms(terms, num_hashes, bands).select(
-        F.col("_id").alias("minhash_id"), "band_id", "band_key"
+    sigs = _min_hashes(terms, num_hashes, portable_term_hash)
+    cand = _band_candidates(
+        _bands(sigs, num_hashes, bands, _portable_band_key), star_bucket_threshold
     )
-    if star_bucket_threshold is not None:
-        w = Window.partitionBy("band_id", "band_key")
-        exploded = exploded.withColumn("_bsz", F.count(F.lit(1)).over(w)).withColumn(
-            "_bmin", F.min("minhash_id").over(w)
-        )
-        small = exploded.filter(F.col("_bsz") <= star_bucket_threshold)
-        star = (
-            exploded.filter(
-                (F.col("_bsz") > star_bucket_threshold)
-                & (F.col("minhash_id") != F.col("_bmin"))
-            )
-            .select(F.col("_bmin").alias("doc_a"), F.col("minhash_id").alias("doc_b"))
-        )
-    else:
-        small, star = exploded, None
-    a, b = small.alias("a"), small.alias("b")
-    cand = a.join(
-        b,
-        (F.col("a.band_id") == F.col("b.band_id"))
-        & (F.col("a.band_key") == F.col("b.band_key"))
-        & (F.col("a.minhash_id") < F.col("b.minhash_id")),
-    ).select(
-        F.col("a.minhash_id").alias("doc_a"), F.col("b.minhash_id").alias("doc_b")
-    )
-    if star is not None:
-        cand = cand.union(star)
-    return _verify_jaccard(cand.distinct(), terms, threshold)
+    return _verify_jaccard(cand, terms, threshold)
 
 
 # --------------------------------------------------------------------------
@@ -506,10 +476,10 @@ def build_minhash_index(
     terms = _distinct_terms(docs, id_col, text_col, shingle_n).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    sigs = _portable_sigs_from_terms(terms, num_hashes).persist(
+    sigs = _min_hashes(terms, num_hashes, portable_term_hash).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    band_rows = _bands_from_sigs(sigs, num_hashes, bands).select(
+    band_rows = _bands(sigs, num_hashes, bands, _portable_band_key).select(
         F.col("_id").alias("doc_id"), "band_id", "band_key"
     )
     # sigs/ first and alone: its job materializes BOTH caches (sigs reads
@@ -570,8 +540,9 @@ def minhash_index_append(
     2. Band-probe: semi-join the stored band table to the batch's band
        keys — only buckets the batch touches are read; bucket size and
        min-id (the star guard) are computed over that touched membership,
-       which equals what a full rebuild would see for those buckets, so
-       probe candidates ≡ rebuild candidates (equality-pinned in tests).
+       which equals what a full rebuild would see for those buckets, and
+       both run ``_band_candidates`` (here keeping batch-touching pairs
+       only), so probe candidates ≡ rebuild candidates by construction.
     3. PREFILTER by signature-estimated Jaccard (r13 verdict ask #1):
        the fraction of matched MinHash positions estimates J, and the
        signatures are already in hand (batch in-flight, partners in
@@ -615,7 +586,6 @@ def minhash_index_append(
     nh, nb, sh = meta["num_hashes"], meta["bands"], meta["shingle_n"]
     thr, star = meta["threshold"], meta["star_bucket_threshold"]
     slack = meta["est_slack"]
-    from pyspark.sql import Window
 
     indexed_ids = indexstore.read(spark, path, "texts").select(
         F.col("doc_id").alias(id_col)
@@ -624,49 +594,15 @@ def minhash_index_append(
     new_terms = _distinct_terms(new_docs, id_col, text_col, sh)
     # ONE batch tokenize+hash pass: signatures are checkpointed (batch-
     # sized), and band rows are a projection of them
-    new_sigs = _portable_sigs_from_terms(new_terms, nh).localCheckpoint()
-    new_bands = _bands_from_sigs(new_sigs, nh, nb)
+    new_sigs = _min_hashes(new_terms, nh, portable_term_hash).localCheckpoint()
+    new_bands = _bands(new_sigs, nh, nb, _portable_band_key)
     stored = indexstore.read(spark, path, "bands")
     keys = new_bands.select("band_id", "band_key").distinct()
     touched = stored.join(keys, ["band_id", "band_key"], "left_semi")
     members = touched.select(
-        F.col("doc_id").alias("m_id"),
-        "band_id",
-        "band_key",
-        F.lit(False).alias("is_new"),
-    ).unionByName(
-        new_bands.select(
-            F.col("_id").alias("m_id"),
-            "band_id",
-            "band_key",
-            F.lit(True).alias("is_new"),
-        )
-    )
-    w = Window.partitionBy("band_id", "band_key")
-    st = members.withColumn("_bsz", F.count(F.lit(1)).over(w)).withColumn(
-        "_bmin",
-        F.min(F.struct(F.col("m_id"), F.col("is_new"))).over(w),
-    )
-    small = st.filter(F.col("_bsz") <= star)
-    a, b = small.alias("a"), small.alias("b")
-    cand_small = a.join(
-        b,
-        (F.col("a.band_id") == F.col("b.band_id"))
-        & (F.col("a.band_key") == F.col("b.band_key"))
-        & (F.col("a.m_id") < F.col("b.m_id")),
-    ).filter(F.col("a.is_new") | F.col("b.is_new")).select(
-        F.col("a.m_id").alias("doc_a"), F.col("b.m_id").alias("doc_b")
-    )
-    cand_star = (
-        st.filter(
-            (F.col("_bsz") > star) & (F.col("m_id") != F.col("_bmin.m_id"))
-        )
-        .filter(F.col("is_new") | F.col("_bmin.is_new"))
-        .select(
-            F.col("_bmin.m_id").alias("doc_a"), F.col("m_id").alias("doc_b")
-        )
-    )
-    cand = cand_small.union(cand_star).distinct()
+        F.col("doc_id").alias("_id"), "band_id", "band_key", F.lit(False).alias("is_new")
+    ).unionByName(new_bands.withColumn("is_new", F.lit(True)))
+    cand = _band_candidates(members, star, new="is_new")
 
     # signature-estimate prefilter BEFORE any term fetch: batch sigs are
     # in hand, partner sigs come from the store
@@ -1003,37 +939,66 @@ def cluster_source_profile(
 SIMHASH_BITS = 63  # bits 0..62 keep the fingerprint in a signed BIGINT
 
 
-def simhash_fingerprints(
-    docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
+def _simhash(
+    docs: DataFrame, id_col: str, text_col: str, term_hash: Column, bits: int
 ) -> DataFrame:
-    """63-bit SimHash: per-token xxhash64, each bit votes ±tf, fingerprint
-    bit = sign of the vote sum. One explode + one groupBy(id) with 63
-    integer-sum aggregates — all codegen, shuffle carries 63 longs/doc."""
+    """``bits``-bit SimHash: ``term_hash`` (an expression over the
+    ``term`` column) per distinct token, each bit votes ±tf, fingerprint
+    bit = sign of the vote sum. One explode + one groupBy(id) with
+    ``bits`` integer-sum aggregates — all codegen, shuffle carries
+    ``bits`` longs/doc."""
     toks = tokens_column(text_col, stop=False)
     tf = (
         fan_out(docs, F.col(id_col))
         .select(F.col(id_col).alias("_id"), F.explode(toks).alias("term"))
         .groupBy("_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .withColumn("h", F.xxhash64(F.col("term")))
+        .withColumn("h", term_hash)
     )
     votes = [
         F.sum(
             F.col("tf")
             * (F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) * 2 - 1)
         ).alias(f"b{b}")
-        for b in range(SIMHASH_BITS)
+        for b in range(bits)
     ]
     agg = tf.groupBy("_id").agg(*votes)
     fp = reduce(
         add,
         [
             F.when(F.col(f"b{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
-            for b in range(SIMHASH_BITS)
+            for b in range(bits)
         ],
     )
     return agg.select(
         F.col("_id").alias(id_col), fp.cast("long").alias("simhash")
+    )
+
+
+def simhash_fingerprints(
+    docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
+) -> DataFrame:
+    """63-bit SimHash over per-token xxhash64 (``_simhash``)."""
+    return _simhash(docs, id_col, text_col, F.xxhash64(F.col("term")), SIMHASH_BITS)
+
+
+PORTABLE_SIMHASH_BITS = 60  # portable_term_hash yields 60 bits (15 hex chars)
+
+
+def simhash_fingerprints_portable(
+    docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
+) -> DataFrame:
+    """60-bit SimHash over md5-derived term hashes — the fully
+    SQL-verifiable twin of ``simhash_fingerprints`` (same vote/sign
+    construction, ``portable_term_hash`` instead of xxhash64, 60 bits
+    because the portable hash carries 15 hex chars). DuckDB reproduces
+    every stage: tf, per-bit ±tf votes via (h >> b) & 1, sign fold."""
+    return _simhash(
+        docs,
+        id_col,
+        text_col,
+        portable_term_hash(F.col("term"), 0),
+        PORTABLE_SIMHASH_BITS,
     )
 
 
@@ -1128,45 +1093,6 @@ def normalized_dedup_summary(docs: DataFrame, text_col: str = "text") -> DataFra
         F.countDistinct("_norm").alias("n_distinct_norm"),
         (F.sum("cnt") - F.countDistinct("_norm")).alias("n_norm_dup_docs"),
         (F.count("_text") - F.countDistinct("_norm")).alias("n_extra_vs_exact"),
-    )
-
-
-PORTABLE_SIMHASH_BITS = 60  # portable_term_hash yields 60 bits (15 hex chars)
-
-
-def simhash_fingerprints_portable(
-    docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """60-bit SimHash over md5-derived term hashes — the fully
-    SQL-verifiable twin of ``simhash_fingerprints`` (same vote/sign
-    construction, ``portable_term_hash`` instead of xxhash64, 60 bits
-    because the portable hash carries 15 hex chars). DuckDB reproduces
-    every stage: tf, per-bit ±tf votes via (h >> b) & 1, sign fold."""
-    toks = tokens_column(text_col, stop=False)
-    tf = (
-        fan_out(docs, F.col(id_col))
-        .select(F.col(id_col).alias("_id"), F.explode(toks).alias("term"))
-        .groupBy("_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .withColumn("h", portable_term_hash(F.col("term"), 0))
-    )
-    votes = [
-        F.sum(
-            F.col("tf")
-            * (F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) * 2 - 1)
-        ).alias(f"b{b}")
-        for b in range(PORTABLE_SIMHASH_BITS)
-    ]
-    agg = tf.groupBy("_id").agg(*votes)
-    fp = reduce(
-        add,
-        [
-            F.when(F.col(f"b{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
-            for b in range(PORTABLE_SIMHASH_BITS)
-        ],
-    )
-    return agg.select(
-        F.col("_id").alias(id_col), fp.cast("long").alias("simhash")
     )
 
 
@@ -1715,10 +1641,10 @@ def rebuild_minhash_index(spark: SparkSession, path: str) -> DataFrame:
     without the dropped docs.
 
     Everything is computed from the PERSISTED relations — stored band
-    rows feed the star-guarded candidate join, stored term sets feed the
-    exact-Jaccard verify — so a rebuild never re-tokenizes or re-hashes
-    a document (the one-shot candidate algebra over the store's docs, by
-    the append≡rebuild band equality the tests pin). Cluster collapse is
+    rows feed the star-guarded candidate join (``_band_candidates``, the
+    append's own), stored term sets feed the exact-Jaccard verify — so a
+    rebuild never re-tokenizes or re-hashes a document (the one-shot
+    candidate algebra over the store's docs). Cluster collapse is
     ``duplicate_clusters`` (partition-local contraction CC). The dropped
     set is localCheckpoint-ed (bounded by the duplicate count), since all
     four table rewrites read it; they commit together. Returns the kept
@@ -1727,30 +1653,13 @@ def rebuild_minhash_index(spark: SparkSession, path: str) -> DataFrame:
     Equality contract (oracle-pinned by ``dedup_minhash_maintenance``):
     rebuild-after-appends ≡ clusters+keep-canonical over the one-shot
     portable pair algebra on (corpus ∪ append survivors)."""
-    from pyspark.sql import Window
-
     meta = indexstore.read_meta(path, "build_minhash_index")
     star, thr = meta["star_bucket_threshold"], meta["threshold"]
-    band_rows = indexstore.read(spark, path, "bands")
+    band_rows = indexstore.read(spark, path, "bands").withColumnRenamed("doc_id", "_id")
     terms = indexstore.read(spark, path, "terms").select(
         F.col("doc_id").alias("_id"), "term"
     )
-    w = Window.partitionBy("band_id", "band_key")
-    st = band_rows.withColumn("_bsz", F.count(F.lit(1)).over(w)).withColumn(
-        "_bmin", F.min("doc_id").over(w)
-    )
-    small = st.filter(F.col("_bsz") <= star)
-    a, b = small.alias("a"), small.alias("b")
-    cand_small = a.join(
-        b,
-        (F.col("a.band_id") == F.col("b.band_id"))
-        & (F.col("a.band_key") == F.col("b.band_key"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-    cand_star = st.filter(
-        (F.col("_bsz") > star) & (F.col("doc_id") != F.col("_bmin"))
-    ).select(F.col("_bmin").alias("doc_a"), F.col("doc_id").alias("doc_b"))
-    cand = cand_small.union(cand_star).distinct()
+    cand = _band_candidates(band_rows, star)
     vpairs = _verify_jaccard(cand, terms, thr)
     dropped = (
         duplicate_clusters(vpairs.select("doc_a", "doc_b"))

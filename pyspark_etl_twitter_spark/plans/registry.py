@@ -545,26 +545,18 @@ ORACLES: dict[str, str] = {
     "text_semantic_dedup_survivors": T.ORACLE_TEXT_SEMANTIC_DEDUP_SURVIVORS,
 }
 
-# ROUND-14 WINDOW: rotation stays DECLARATIVE — the list below is
-# reordered to the front of QUERIES at import time. After r13 the
-# staleness distribution of newest driver rows was
-# {r13: 50, r12: 50, r11: 50, r10: 50, r9: 13} plus one never-windowed
-# r13 row (zipf_by_source). This window takes all six never-checked
-# rows (five new-in-r14: containment_decontaminate_counts,
-# dedup_cluster_source_profile, knn_ivf_rebalanced,
-# dedup_minhash_maintenance, dedup_cdc_rebuild; plus zipf_by_source),
-# ALL thirteen remaining r9 rows (the alphabetical tail the r13 window
-# could not fit), and the 31 alphabetically-first r10 rows — the
-# nineteen remaining r10 rows (semdedup_fast_summary, whose scheduled
-# rows-only refresh a hash-verifiable never-checked row outranks, plus
-# sentiment_classes .. winsorized_price_stats) rotate in r15, which
-# brings max staleness to r10. Every slot is oracle-backed.
-# ROUND-15 WINDOW (r14 verdict ask #2): the 19 rows whose newest driver
-# hash is r10 — the staleness-histogram tail, including
-# semdedup_fast_summary's twice-displaced rows-only refresh (the ONE
-# sanctioned rows-only slot this round; every other slot is
-# oracle-backed) — then the 31 alphabetically-first oracle-backed r11
-# rows. Max staleness after r15 is r11 on the 19 remaining r11 rows.
+# DRIVER_WINDOW: the 50 rows put first in QUERIES at import time, so the
+# first 50 of ``__spark_entry__.queries()``: a caller that hash-checks
+# only the leading 50 rows checks these. Rotation rule, each time the
+# window is rotated:
+# 1. rows never hash-checked there, then rows whose plan-producing code
+#    changed since their newest such hash (a green on the old plan says
+#    nothing about the new one);
+# 2. then the stalest rows, by the round of their newest such hash,
+#    alphabetically within one round's cohort;
+# 3. every slot oracle-backed, except at most one rows-only refresh
+#    (today semdedup_fast_summary, pinned by test_registry_contract).
+# The cohort comments in the list name the round each block was stale at.
 DRIVER_WINDOW: list[str] = [
     # r10 cohort (19)
     "semdedup_fast_summary",

@@ -750,7 +750,7 @@ dropped AS (
   UNION
   SELECT doc_a FROM vpairs WHERE doc_a % 20 = 0 AND doc_b % 20 <> 0
 ),
-store AS (
+store AS MATERIALIZED (
   SELECT * FROM sub
   WHERE doc_id % 20 <> 0 OR doc_id NOT IN (SELECT d FROM dropped)
 ),

@@ -2,6 +2,8 @@
 MinHash/SimHash are xxhash64-based (not DuckDB-oracle-able); their gate is
 recall/precision against the exact operators here."""
 
+import ast
+import hashlib
 from pathlib import Path
 
 import pytest
@@ -16,6 +18,9 @@ from pyspark_etl_twitter_spark.operators.dedup import (
     simhash_fingerprints,
     simhash_near_dup_pairs,
 )
+from tests.conftest import SF_TINY
+
+PACKAGE = Path(__file__).resolve().parents[1] / "pyspark_etl_twitter_spark"
 
 BASE = (
     "the quick brown fox jumps over the lazy dog near the river bank today",
@@ -1649,3 +1654,68 @@ def test_cdc_chunk_dedup_rebuild_roundtrip(spark):
         n_toks = len(text.split(" "))
         # expected chunk length = divisor (8); allow a loose band
         assert 1 <= out[i].n_chunks <= n_toks
+
+
+#: sorted-row sha256 prefix of the rows-only dedup rows at sf0.001: they
+#: are xxhash64-based and have no DuckDB twin, so nothing else would see
+#: a change in the MinHash/SimHash bodies they share with the portable rows
+ROWS_ONLY_SHA = {
+    "dedup_minhash_pairs": "0e8459c6637984b5",
+    "dedup_simhash_fingerprints": "ca7c9f38104e0e45",
+    "dedup_clusters_minhash": "b82aadc7e55945df",
+}
+
+
+@pytest.mark.parametrize("name", sorted(ROWS_ONLY_SHA))
+def test_rows_only_dedup_rows_keep_their_output(spark, name):
+    from pyspark_etl_twitter_spark.plans.registry import QUERIES
+
+    rows = sorted(tuple(r) for r in QUERIES[name](spark, SF_TINY).collect())
+    assert hashlib.sha256(repr(rows).encode()).hexdigest()[:16] == ROWS_ONLY_SHA[name]
+
+
+class _BandJoinSites(ast.NodeVisitor):
+    """The innermost function of every window over ("band_id", …) and of
+    every ``_bsz`` string in one module."""
+
+    def __init__(self, rel: Path):
+        self.fn, self.windows, self.bsz = f"{rel}", set(), set()
+
+    def visit_FunctionDef(self, node):
+        outer, self.fn = self.fn, f"{self.fn}:{node.name}"
+        self.generic_visit(node)
+        self.fn = outer
+
+    def visit_Call(self, node):
+        if (
+            isinstance(node.func, ast.Attribute)
+            and node.func.attr == "partitionBy"
+            and node.args
+            and any(
+                isinstance(c, ast.Constant) and c.value == "band_id"
+                for c in ast.walk(node.args[0])
+            )
+        ):
+            self.windows.add(self.fn)
+        self.generic_visit(node)
+
+    def visit_Constant(self, node):
+        if isinstance(node.value, str) and "_bsz" in node.value:
+            self.bsz.add(self.fn)
+
+
+def test_star_guarded_band_join_lives_in_one_function():
+    """Every MinHash path (the xxhash64 and md5 pair flows, the store
+    append and the rebuild) runs the one star-guarded band join, so the
+    append's candidates equal the rebuild's by construction: no second
+    window over the band buckets in the package and no second bucket-size
+    column in the dedup module (curation's ``_bsz`` is a set size)."""
+    windows, bsz = set(), set()
+    for file in sorted(PACKAGE.rglob("*.py")):
+        rel = file.relative_to(PACKAGE)
+        sites = _BandJoinSites(rel)
+        sites.visit(ast.parse(file.read_text(), filename=str(file)))
+        windows |= sites.windows
+        if rel == Path("operators/dedup.py"):
+            bsz |= sites.bsz
+    assert windows == bsz == {"operators/dedup.py:_band_candidates"}
