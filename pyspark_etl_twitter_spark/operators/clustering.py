@@ -371,8 +371,8 @@ def kmeans_assign_join(
     the distance, and argmin is ``min(struct(d2, cluster))`` — PARTIAL
     aggregation collapses each map task's pair stream to one candidate
     per vector before the exchange, so the shuffle carries N rows, not
-    N×k (the reason this beats the row_number window the IVF append
-    path uses: a window must shuffle all N×k pairs to sort them).
+    N×k (the reason this beats a row_number window over the pairs: a
+    window must shuffle all N×k pairs to sort them).
 
     Same distance arithmetic (identical fold, element order, casts) and
     same tie-break (min struct orders by d2 then cluster = first-match

@@ -4,18 +4,37 @@ Embeddings are plain ``array<float>`` columns; all vector math is built-in
 higher-order functions (``zip_with`` + ``aggregate``) evaluated JVM-side in
 double precision — no Python, no VectorUDT.
 
-Three paths:
-- ``cosine_topk``: brute-force exact top-k — broadcast the (small) query set
-  against the full corpus; one pass, no shuffle except the final per-query
-  window. The 100 TB cost is O(corpus × queries) — correct baseline.
-- ``ann_lsh_topk`` / ``ivf_topk``: one-shot approximate top-k — build the
-  LSH-bucket / inverted-list structure in-plan, then probe. Recall < 1 by
-  design; the scale path when queries × corpus is too large.
-- ``build_lsh_index`` / ``build_ivf_index`` + ``*_probe_indexed``: the
-  amortized form — the index is written ONCE as parquet partitioned by
-  bucket/list_id, and every later probe is an equi-join that only reads the
-  probed partitions (partition pruning on the index layout). At 100 TB this
-  is the only sane shape: index build is a batch job, probes are cheap.
+The rungs, exact to most compressed:
+- brute force: ``cosine_topk`` (broadcast query block, one per-query
+  window; O(corpus × queries), the correct baseline), its Arrow twin
+  ``cosine_topk_pandas``, the JL-projected ``rp_cosine_topk`` and the
+  sq8-dequantized ``sq8_topk``;
+- LSH: ``ann_lsh_topk`` one-shot; ``build_lsh_index``,
+  ``lsh_index_append`` and ``lsh_probe_indexed`` persisted;
+- IVF: ``ivf_topk`` one-shot; ``build_ivf_index``, ``ivf_index_append``,
+  ``ivf_probe_indexed`` and ``rebalance_ivf_index`` persisted;
+- PQ: ``pq_adc_topk`` one-shot; ``build_pq_code_table``,
+  ``pq_code_table_append`` and ``pq_adc_topk_indexed`` persisted;
+- IVF-PQ: ``ivfpq_topk`` one-shot; ``build_ivfpq_index``,
+  ``ivfpq_index_append`` and ``ivfpq_probe_indexed`` persisted.
+
+A persisted index is written ONCE as parquet partitioned by bucket/list_id,
+and every later probe is an equi-join that only reads the probed partitions
+(partition pruning on the index layout). At 100 TB this is the only sane
+shape: index build is a batch job, probes are cheap.
+
+Each stage has one private body, which the one-shot call, the build, the
+append and the probe all run, so they agree by construction:
+- LSH: hyperplane tables ``_lsh_tables``, corpus buckets ``_lsh_base``,
+  query block ``_lsh_queries``, probe ``_lsh_probe`` (verify and rank in
+  ``_lsh_score_pairs``);
+- IVF: list assignment ``_ivf_assign`` (two-level rung
+  ``_ivf_assign_two_level``), probe ``_ivf_probe``;
+- PQ and IVF-PQ: sub-space distances ``_pq_subdists`` (codes
+  ``_pq_codes``, the quantization MSE), residual encode
+  ``_ivfpq_encode_plan``, driver-side lookup table ``_pq_lut``, ADC
+  scan-and-rank ``_pq_adc_rank`` behind the flat front ``_pq_adc_flat``
+  and the IVF-PQ front ``_ivfpq_probe_plan``.
 """
 
 from __future__ import annotations
@@ -242,6 +261,21 @@ def _probe_buckets(bucket: Column, n_planes: int, probe_bits: int) -> Column:
     return F.transform(lit_ints(masks), lambda m: bucket.bitwiseXOR(m))
 
 
+def _lsh_tables(
+    embeddings: DataFrame, vec_col: str, n_planes: int, n_tables: int, seed: int
+) -> list[list[list[float]]] | None:
+    """The seeded hyperplane tables of an OR-construction LSH index, sized
+    to the dimension of ``embeddings``' first vector (one single-row
+    ``first()`` action); None when the frame is empty."""
+    row = embeddings.select(vec_col).first()
+    if row is None:
+        return None
+    return [
+        _hyperplanes(len(row[0]), n_planes, _table_seed(seed, t))
+        for t in range(n_tables)
+    ]
+
+
 def _lsh_base(
     embeddings: DataFrame,
     planes_by_table: list[list[list[float]]],
@@ -263,6 +297,51 @@ def _lsh_base(
         l2_norm(F.col(vec_col)).alias("nrm"),
         F.posexplode(buckets).alias("t", "bucket"),
     )
+
+
+def _lsh_queries(base: DataFrame, n_queries: int) -> DataFrame:
+    """The query block of an ``_lsh_base`` relation: its first
+    ``n_queries`` vectors, one row per (query, table)."""
+    return base.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("q_id"),
+        F.col("emb").alias("q_emb"),
+        F.col("nrm").alias("q_nrm"),
+        F.col("t").alias("q_t"),
+        F.col("bucket").alias("q_bucket"),
+    )
+
+
+def _lsh_probe(
+    corpus: DataFrame,
+    queries: DataFrame,
+    *,
+    n_planes: int,
+    probe_bits: int,
+    k: int,
+    round_dp: int,
+) -> DataFrame:
+    """The one LSH probe, under ``ann_lsh_topk`` and ``lsh_probe_indexed``:
+    each query row ``(q_id, q_emb, q_nrm, q_t, q_bucket)`` explodes into
+    its multi-probe buckets (``_probe_buckets``), the broadcast probe side
+    equi-joins the corpus on ``(t, bucket)`` — for a partitioned index
+    only the probed partitions are scanned (dynamic partition pruning) —
+    and ``_lsh_score_pairs`` verifies and ranks the candidates."""
+    probes = queries.select(
+        "q_id",
+        "q_emb",
+        "q_nrm",
+        "q_t",
+        F.explode(
+            _probe_buckets(F.col("q_bucket"), n_planes, probe_bits)
+        ).alias("q_bucket"),
+    )
+    pairs = corpus.join(
+        F.broadcast(probes),
+        (F.col("t") == F.col("q_t"))
+        & (F.col("bucket") == F.col("q_bucket"))
+        & (F.col("vec_id") != F.col("q_id")),
+    )
+    return _lsh_score_pairs(pairs, k=k, round_dp=round_dp)
 
 
 def _lsh_score_pairs(pairs: DataFrame, *, k: int, round_dp: int) -> DataFrame:
@@ -369,28 +448,18 @@ def ann_lsh_topk(
     p = _apply_lsh_profile(
         profile, n_planes=n_planes, n_tables=n_tables, probe_bits=probe_bits
     )
-    n_planes, n_tables, probe_bits = p["n_planes"], p["n_tables"], p["probe_bits"]
-    dim = len(embeddings.select(vec_col).first()[0])
-    planes_by_table = [
-        _hyperplanes(dim, n_planes, _table_seed(seed, t)) for t in range(n_tables)
-    ]
+    planes_by_table = _lsh_tables(
+        embeddings, vec_col, p["n_planes"], p["n_tables"], seed
+    )
     base = _lsh_base(embeddings, planes_by_table, id_col=id_col, vec_col=vec_col)
-    queries = base.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("emb").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-        F.col("t").alias("q_t"),
-        F.explode(
-            _probe_buckets(F.col("bucket"), n_planes, probe_bits)
-        ).alias("q_bucket"),
+    return _lsh_probe(
+        base,
+        _lsh_queries(base, n_queries),
+        n_planes=p["n_planes"],
+        probe_bits=p["probe_bits"],
+        k=k,
+        round_dp=round_dp,
     )
-    pairs = base.join(
-        F.broadcast(queries),
-        (F.col("t") == F.col("q_t"))
-        & (F.col("bucket") == F.col("q_bucket"))
-        & (F.col("vec_id") != F.col("q_id")),
-    )
-    return _lsh_score_pairs(pairs, k=k, round_dp=round_dp)
 
 
 def ivf_assignments(
@@ -411,10 +480,10 @@ def ivf_assignments(
     this single assignment pass, so the join shape is the real thing).
     ``train_iters > 0`` runs that refinement (operators/clustering
     Lloyd's) first, which evens out list populations — the probe path's
-    worst case is its biggest list. Assignment is a broadcast cross join
-    against the centroid dimension + per-vector argmin window: one narrow
-    pass over the corpus, no corpus shuffle except the final argmin
-    partition by id. Returns (assignments, centroids).
+    worst case is its biggest list. Assignment is ``_ivf_assign`` over
+    the collected centroid rows: one narrow pass over the corpus, no
+    exchange (the append runs the same function). Returns
+    (assignments, centroids).
 
     ``coarse_probe`` (None = exact single-level) opts the assignment
     into the TWO-LEVEL coarse quantizer — the cosine twin of
@@ -466,29 +535,32 @@ def ivf_assignments(
             F.col("emb").alias("c_emb"),
             F.col("nrm").alias("c_nrm"),
         )
-    # Assignment as broadcast-LITERAL argmax (the kmeans `_assign` shape,
-    # r7): the old crossJoin + row_number window shuffled the corpus
-    # n_lists-fold on vec_id just to pick each row's max — 14 exchanges in
-    # the knn_ivf plan. Collecting the n_lists centroid rows (bounded,
-    # n_lists ≪ corpus by construction) and folding the argmax into one
-    # codegen expression removes ALL exchanges from assignment; ties break
-    # to the lowest list_id exactly like the window's (c_sim DESC, list_id)
-    # order, and the sims are the same expressions, so results are
-    # bit-identical (pinned by the knn_ivf oracle + indexed≡one-shot tests).
     crows = sorted(centroids.collect(), key=lambda r: r["list_id"])
+    return _ivf_assign(base, crows, coarse_probe), centroids
+
+
+def _ivf_assign(base: DataFrame, crows, coarse_probe: int | None) -> DataFrame:
+    """The one IVF list assignment, under the build (``ivf_assignments``)
+    and the append (``ivf_index_append``): ``base`` rows
+    ``(vec_id, emb, nrm)`` gain the ``list_id`` of their most
+    cosine-similar centroid among the collected, list_id-sorted centroid
+    rows ``crows``. ``coarse_probe`` (not None, k > 1) takes the
+    two-level rung (``_ivf_assign_two_level``).
+
+    Single-level assignment is a broadcast-LITERAL argmax (the kmeans
+    ``_assign`` shape, r7): a crossJoin + row_number window shuffled the
+    corpus n_lists-fold on vec_id just to pick each row's max — 14
+    exchanges in the knn_ivf plan. The n_lists centroid rows (bounded,
+    n_lists ≪ corpus by construction) fold into one codegen expression
+    with no exchange. Sims are one HOF fold over a 2-D centroid literal
+    (k·dim-times smaller than k unrolled dots + greatest + a k-arm
+    when-chain); ``array_position`` picks the FIRST max, so ties go to
+    the lowest list_id, the window's (sim DESC, list_id) order. list_ids
+    are contiguous by construction (enumerate / first-k vec_ids),
+    asserted so the positional lookup can never silently mislabel."""
     if coarse_probe is not None and len(crows) > 1:
-        return (
-            _ivf_assign_two_level(base, crows, coarse_probe),
-            centroids,
-        )
+        return _ivf_assign_two_level(base, crows, coarse_probe)
     list_ids = [int(r["list_id"]) for r in crows]
-    # sims as one HOF fold over a 2-D centroid literal (see clustering
-    # _assign): k·dim-times smaller expression tree than k unrolled dots +
-    # greatest + a k-arm when-chain. array_position picks the FIRST max →
-    # ties resolve to the lowest list_id, same as the window's
-    # (c_sim DESC, list_id) order. list_ids are contiguous by construction
-    # (enumerate / first-k vec_ids), asserted below so the positional
-    # lookup can never silently mislabel.
     assert list_ids == list(range(len(list_ids))), list_ids
     cent_lit = lit_doubles_2d([r["c_emb"] for r in crows])
     nrm_lit = lit_doubles(float(r["c_nrm"]) for r in crows)
@@ -498,7 +570,7 @@ def ivf_assignments(
         / (F.col("nrm") * F.element_at(nrm_lit, i + 1)),
     )
     scored = base.select("vec_id", "emb", "nrm", sims.alias("_s"))
-    assignments = scored.select(
+    return scored.select(
         "vec_id",
         "emb",
         "nrm",
@@ -506,7 +578,6 @@ def ivf_assignments(
         .cast("long")
         .alias("list_id"),
     )
-    return assignments, centroids
 
 
 def _ivf_assign_two_level(base: DataFrame, crows, n_probe: int) -> DataFrame:
@@ -737,7 +808,7 @@ def _write_ivf_tables(
     max_queries: int,
 ) -> None:
     """Write and commit the IVF store's three tables. The assignment
-    (centroid cross join + argmin) feeds both the assignments and the
+    (``_ivf_assign``'s centroid argmax) feeds both the assignments and the
     query block, so it is cached for one compute pass: the big write runs
     first and fills the cache, then the two single-file writes run as one
     wave over warm blocks."""
@@ -799,11 +870,9 @@ def lsh_build_plan(
     the single-row ``first()`` probing the embedding dimension — the
     same probe the real build performs."""
     p = _apply_lsh_profile(profile, n_planes=n_planes, n_tables=n_tables)
-    dim = len(embeddings.select(vec_col).first()[0])
-    planes_by_table = [
-        _hyperplanes(dim, p["n_planes"], _table_seed(seed, t))
-        for t in range(p["n_tables"])
-    ]
+    planes_by_table = _lsh_tables(
+        embeddings, vec_col, p["n_planes"], p["n_tables"], seed
+    )
     return _lsh_base(embeddings, planes_by_table, id_col=id_col, vec_col=vec_col)
 
 
@@ -898,10 +967,7 @@ def build_lsh_index(
     the profile to the probe call too, or rely on its default)."""
     p = _apply_lsh_profile(profile, n_planes=n_planes, n_tables=n_tables)
     n_planes, n_tables = p["n_planes"], p["n_tables"]
-    dim = len(embeddings.select(vec_col).first()[0])
-    planes_by_table = [
-        _hyperplanes(dim, n_planes, _table_seed(seed, t)) for t in range(n_tables)
-    ]
+    planes_by_table = _lsh_tables(embeddings, vec_col, n_planes, n_tables, seed)
     # persist across the writes: the hashed relation is consumed by the
     # corpus write (twice under repartitionByRange — sampling + write),
     # then the query-block write; without the cache each pass re-runs the
@@ -925,13 +991,7 @@ def build_lsh_index(
             )
         if layout not in indexstore.LSH_CORPUS:
             raise ValueError(f"layout must be auto|partitioned|flat, got {layout!r}")
-        queries = base.filter(F.col("vec_id") < max_queries).select(
-            F.col("vec_id").alias("q_id"),
-            F.col("emb").alias("q_emb"),
-            F.col("nrm").alias("q_nrm"),
-            F.col("t").alias("q_t"),
-            F.col("bucket").alias("q_bucket"),
-        )
+        queries = _lsh_queries(base, max_queries)
         written = [
             indexstore.write(corpus, path, indexstore.LSH_CORPUS[layout]),
             indexstore.write(queries.coalesce(1), path, indexstore.QUERIES),
@@ -989,7 +1049,6 @@ def lsh_probe_indexed(
     pre-meta single-table layout lacks — it would fail mid-plan with an
     AnalysisException, so fail early and say how to fix it)."""
     meta = indexstore.read_meta(path, "build_lsh_index")
-    n_planes = meta["n_planes"]
     corpus = indexstore.read(spark, path, "corpus")
     if meta.get("quantize"):
         # int8 codes: cos = q_scale·Σ code_i·q_i / (nrm·q_nrm). Folding the
@@ -1000,22 +1059,15 @@ def lsh_probe_indexed(
         ).drop("q_scale")
     queries = indexstore.read(spark, path, "queries").filter(
         F.col("q_id") < n_queries
-    ).select(
-        "q_id",
-        "q_emb",
-        "q_nrm",
-        "q_t",
-        F.explode(
-            _probe_buckets(F.col("q_bucket"), n_planes, probe_bits)
-        ).alias("q_bucket"),
     )
-    pairs = corpus.join(
-        F.broadcast(queries),
-        (F.col("t") == F.col("q_t"))
-        & (F.col("bucket") == F.col("q_bucket"))
-        & (F.col("vec_id") != F.col("q_id")),
+    return _lsh_probe(
+        corpus,
+        queries,
+        n_planes=meta["n_planes"],
+        probe_bits=probe_bits,
+        k=k,
+        round_dp=round_dp,
     )
-    return _lsh_score_pairs(pairs, k=k, round_dp=round_dp)
 
 
 def embedding_near_dup_pairs(
@@ -1124,9 +1176,10 @@ def ivf_index_append(
     coarse_probe: int | None | str = "auto",
 ) -> None:
     """Incrementally add vectors to a persisted IVF index WITHOUT
-    rebuilding: assign the new batch to the EXISTING centroids (broadcast
-    k-row table, narrow codegen argmin — identical math to the original
-    assignment) and append into the partitioned assignments layout. The
+    rebuilding: assign the new batch to the EXISTING centroids with the
+    build's own assignment (``_ivf_assign`` — so an appended vector lands
+    in the list a build over the same centroids would pick) and append
+    into the partitioned assignments layout. The
     on-disk inverted lists grow in place; probes see the union
     immediately. Centroids drift as the corpus grows — re-run
     ``build_ivf_index`` on a schedule to re-center (the standard
@@ -1151,24 +1204,7 @@ def ivf_index_append(
         F.col(vec_col).alias("emb"),
         l2_norm(F.col(vec_col)).alias("nrm"),
     )
-    if coarse_probe is not None and len(crows) > 1:
-        assigned = _ivf_assign_two_level(base, crows, coarse_probe)
-    else:
-        joined = base.crossJoin(F.broadcast(centroids))
-        sim = dot(F.col("emb"), F.col("c_emb")) / (F.col("nrm") * F.col("c_nrm"))
-        assigned = (
-            joined.withColumn("_sim", sim)
-            .withColumn(
-                "_rk",
-                F.row_number().over(
-                    Window.partitionBy("vec_id").orderBy(
-                        F.desc("_sim"), F.asc("list_id")
-                    )
-                ),
-            )
-            .filter(F.col("_rk") == 1)
-            .select("vec_id", "emb", "nrm", "list_id")
-        )
+    assigned = _ivf_assign(base, crows, coarse_probe)
     indexstore.append(path, (indexstore.IVF_ASSIGNMENTS, assigned))
 
 
@@ -1194,15 +1230,12 @@ def lsh_index_append(
     skipping the real rows), and NULL rows in any position must not be
     written as corrupt bucket entries."""
     meta = indexstore.read_meta(path, "build_lsh_index")
-    n_planes, n_tables, seed = meta["n_planes"], meta["n_tables"], meta["seed"]
     new_embeddings = new_embeddings.filter(F.col(vec_col).isNotNull())
-    probe = new_embeddings.select(vec_col).first()
-    if probe is None:
+    planes_by_table = _lsh_tables(
+        new_embeddings, vec_col, meta["n_planes"], meta["n_tables"], meta["seed"]
+    )
+    if planes_by_table is None:
         return
-    dim = len(probe[0])
-    planes_by_table = [
-        _hyperplanes(dim, n_planes, _table_seed(seed, t)) for t in range(n_tables)
-    ]
     base = _lsh_base(new_embeddings, planes_by_table, id_col=id_col, vec_col=vec_col)
     if meta.get("quantize"):
         base = _lsh_quantize(base)
@@ -1459,6 +1492,54 @@ def _pq_books_lit(books: list[list[list[float]]]) -> Column:
     return lit_doubles_3d(books)
 
 
+def _pq_subdists(vec: Column, books: list[list[list[float]]]) -> Column:
+    """The one PQ sub-space distance array: ``dists[s][j] = Σ_t
+    (vec[s·dsub+t] − books[s][j][t])²``, m × ksub doubles per row, over
+    a vector column (raw in ``pq_encode`` and ``pq_reconstruction_mse``,
+    the residual in ``_ivfpq_encode_plan``). ``t`` folds ascending in
+    double precision (the ``dot`` contract), and each sub-space's ksub
+    distances are materialized ONCE, so an argmin or min reads the
+    evaluated array instead of re-running the dsub-fold per comparison."""
+    m, ksub, dsub = len(books), len(books[0]), len(books[0][0])
+    books_lit = _pq_books_lit(books)
+
+    def subdist(s, j):
+        return F.aggregate(
+            F.sequence(F.lit(0), F.lit(dsub - 1)),
+            F.lit(0.0),
+            # (d*d, not F.pow(d, 2): Math.pow costs ~4.6x in the interpreted
+            # HOF path for bit-identical values — measured 6.0 s -> 1.3 s on
+            # the sf0.1 encode; oracles square by multiplication too)
+            lambda acc, t: acc
+            + (lambda d: d * d)(
+                F.element_at(vec, (s * dsub + t + 1).cast("int")).cast("double")
+                - F.element_at(
+                    F.element_at(
+                        F.element_at(books_lit, (s + 1).cast("int")),
+                        (j + 1).cast("int"),
+                    ),
+                    (t + 1).cast("int"),
+                )
+            ),
+        )
+
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(m - 1)),
+        lambda s: F.transform(
+            F.sequence(F.lit(0), F.lit(ksub - 1)), lambda j: subdist(s, j)
+        ),
+    )
+
+
+def _pq_codes(vec: Column, books: list[list[list[float]]]) -> Column:
+    """PQ codes of a vector column: the per-sub-space argmin of
+    ``_pq_subdists`` (``array_position`` first match — ties → lowest j)."""
+    return F.transform(
+        _pq_subdists(vec, books),
+        lambda d: (F.array_position(d, F.array_min(d)) - 1).cast("int"),
+    )
+
+
 def pq_encode(
     embeddings: DataFrame,
     books: list[list[list[float]]],
@@ -1477,42 +1558,9 @@ def pq_encode(
     summation order, same contract as ``dot``).
 
     Returns ``(vec_id, codes array<int>)``."""
-    m, ksub, dsub = len(books), len(books[0]), len(books[0][0])
-    books_lit = _pq_books_lit(books)
-    emb = F.col("_emb")
-    subdist = lambda s, j: F.aggregate(  # noqa: E731
-        F.sequence(F.lit(0), F.lit(dsub - 1)),
-        F.lit(0.0),
-        # (d*d, not F.pow(d, 2): Math.pow costs ~4.6x in the interpreted
-        # HOF path for bit-identical values — measured 6.0 s -> 1.3 s on
-        # the sf0.1 encode; oracles square by multiplication too)
-        lambda acc, t: acc
-        + (
-            lambda d: d * d
-        )(
-            F.element_at(emb, (s * dsub + t + 1).cast("int")).cast("double")
-            - F.element_at(
-                F.element_at(F.element_at(books_lit, (s + 1).cast("int")), (j + 1).cast("int")),
-                (t + 1).cast("int"),
-            )
-        ),
-    )
-    # materialize each sub-space's ksub distances ONCE, then argmin over
-    # the array — array_min/array_position read the same evaluated array
-    # instead of re-running the dsub-fold per comparison
-    dists = F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        lambda s: F.transform(
-            F.sequence(F.lit(0), F.lit(ksub - 1)), lambda j: subdist(s, j)
-        ),
-    )
-    codes = F.transform(
-        dists,
-        lambda d: (F.array_position(d, F.array_min(d)) - 1).cast("int"),
-    )
     return embeddings.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_emb")
-    ).select("vec_id", codes.alias("codes"))
+    ).select("vec_id", _pq_codes(F.col("_emb"), books).alias("codes"))
 
 
 def pq_adc_topk(
@@ -1554,59 +1602,56 @@ def pq_adc_topk(
         books = pq_codebooks(
             embeddings, id_col=id_col, vec_col=vec_col, m=m, ksub=ksub
         )
-    dsub = len(books[0][0])
     q_rows = sorted(
         embeddings.filter(F.col(id_col) < n_queries)
         .select(id_col, vec_col)
         .collect(),
         key=lambda r: r[0],
     )
-    # LUT in plain Python doubles, t ascending — bit-identical to the
-    # encode fold's arithmetic on the same float32→double promotions
-    lut = [
-        [
-            [
-                sum(
-                    (lambda d: d * d)(float(vec[s * dsub + t]) - books[s][j][t])
-                    for t in range(dsub)
-                )
-                for j in range(ksub)
-            ]
-            for s in range(m)
-        ]
-        for _, vec in q_rows
-    ]
-    lut_lit = lit_doubles_3d(lut)
-    qid_lit = (
-        lit_ints([int(r[0]) for r in q_rows])
-        if all(-(2**31) <= int(r[0]) <= 2**31 - 1 for r in q_rows)
-        else lit_longs([int(r[0]) for r in q_rows])
-    )
     codes = pq_encode(embeddings, books, id_col=id_col, vec_col=vec_col)
-    qi = F.col("_qi")
+    return _pq_adc_flat(codes, q_rows, books, k=k, round_dp=round_dp)
+
+
+def _pq_lut(vec, books: list[list[list[float]]]) -> list[list[float]]:
+    """Driver-side ADC lookup table ``lut[s][j] = ‖vec_s − books[s][j]‖²``
+    for one query (or one query residual): ``_py_l2``, the t-ascending
+    fold ``_pq_subdists`` runs, on the same float32→double promotions, so
+    an entry is bit-identical to the encode's distance."""
+    vec = [float(x) for x in vec]
+    dsub = len(books[0][0])
+    return [
+        [_py_l2(vec[s * dsub : (s + 1) * dsub], entry) for entry in book]
+        for s, book in enumerate(books)
+    ]
+
+
+def _pq_adc_rank(rows: DataFrame, luts, *, k: int, round_dp: int) -> DataFrame:
+    """The one ADC scan-and-rank tail, under flat PQ (``_pq_adc_flat``)
+    and IVF-PQ (``_ivfpq_probe_plan``). ``rows`` carry ``(q_id, vec_id,
+    codes, qp)``; ``qp`` indexes ``luts``, one ``_pq_lut`` per query (flat)
+    or per (query, probed list) (IVF-PQ), shipped as ONE 3-D literal.
+    ADC is ``Σ_s luts[qp][s][codes[s]]``, s ascending — m array lookups
+    per (query, vector) instead of a dim-length fold. Self-pairs drop,
+    then one per-query window ranks by (rounded ADC asc, neighbor_id).
+    Returns ``(q_id, neighbor_id, adc_dist, rank)``."""
+    lut_lit = lit_doubles_3d(luts)
+    m = len(luts[0]) if luts else 0  # no queries: no rows to score
     adc = F.aggregate(
         F.sequence(F.lit(0), F.lit(m - 1)),
         F.lit(0.0),
         lambda acc, s: acc
         + F.element_at(
             F.element_at(
-                F.element_at(lut_lit, (qi + 1).cast("int")), (s + 1).cast("int")
+                F.element_at(lut_lit, (F.col("qp") + 1).cast("int")),
+                (s + 1).cast("int"),
             ),
             (F.element_at(F.col("codes"), (s + 1).cast("int")) + 1).cast("int"),
         ),
     )
-    scored = (
-        codes.select(
-            F.col("vec_id").alias("neighbor_id"),
-            "codes",
-            F.explode(F.sequence(F.lit(0), F.lit(len(q_rows) - 1))).alias("_qi"),
-        )
-        .select(
-            F.element_at(qid_lit, (qi + 1).cast("int")).alias("q_id"),
-            "neighbor_id",
-            F.round(adc, round_dp).alias("adc_dist"),
-        )
-        .filter(F.col("q_id") != F.col("neighbor_id"))
+    scored = rows.filter(F.col("vec_id") != F.col("q_id")).select(
+        "q_id",
+        F.col("vec_id").alias("neighbor_id"),
+        F.round(adc, round_dp).alias("adc_dist"),
     )
     w = Window.partitionBy("q_id").orderBy(
         F.col("adc_dist").asc(), F.col("neighbor_id")
@@ -1616,6 +1661,34 @@ def pq_adc_topk(
         .filter(F.col("rank") <= k)
         .select("q_id", "neighbor_id", "adc_dist", "rank")
     )
+
+
+def _pq_adc_flat(
+    codes: DataFrame, queries, books, *, k: int, round_dp: int
+) -> DataFrame:
+    """Flat-PQ front of ``_pq_adc_rank`` over a ``(vec_id, codes)`` table
+    and a bounded ``(q_id, vector)`` query list: ``qp`` is the query's
+    position, generated by ``explode(sequence(...))`` (no cross join —
+    ``pq_adc_topk``'s plan shape), and ``q_id`` a literal lookup
+    (int32-ranged ids keep IntegerType, bigger ids are longs)."""
+    ids = [int(q) for q, _ in queries]
+    qid_lit = (
+        lit_ints(ids)
+        if all(-(2**31) <= i <= 2**31 - 1 for i in ids)
+        else lit_longs(ids)
+    )
+    rows = codes.select(
+        "vec_id",
+        "codes",
+        F.explode(F.sequence(F.lit(0), F.lit(len(ids) - 1))).alias("qp"),
+    ).select(
+        F.element_at(qid_lit, (F.col("qp") + 1).cast("int")).alias("q_id"),
+        "vec_id",
+        "codes",
+        "qp",
+    )
+    luts = [_pq_lut(vec, books) for _, vec in queries]
+    return _pq_adc_rank(rows, luts, k=k, round_dp=round_dp)
 
 
 def pq_encode_pandas(
@@ -1727,7 +1800,7 @@ def _ivfpq_model(seed_rows, n_lists: int, m: int, ksub: int):
     return cents, books, dsub
 
 
-def _ivfpq_encode_plan(base, cents, books, m: int, ksub: int, dsub: int):
+def _ivfpq_encode_plan(base, cents, books):
     """Assign + residual-encode as ONE zero-exchange codegen pass over
     ``base`` (vec_id, _emb): centroid and codebook literals, L2-argmin
     assignment (lowest-list tie), per-sub-space residual argmin codes.
@@ -1750,37 +1823,9 @@ def _ivfpq_encode_plan(base, cents, books, m: int, ksub: int, dsub: int):
         F.element_at(cent_lit, F.col("list_id") + 1),
         lambda x, y: x.cast("double") - y,
     )
-    books_lit = _pq_books_lit(books)
-    res = F.col("_res")
-    subdist = lambda s, j: F.aggregate(  # noqa: E731
-        F.sequence(F.lit(0), F.lit(dsub - 1)),
-        F.lit(0.0),
-        lambda acc, t: acc
-        + (
-            lambda d: d * d  # not F.pow — see pq_encode
-        )(
-            F.element_at(res, (s * dsub + t + 1).cast("int"))
-            - F.element_at(
-                F.element_at(
-                    F.element_at(books_lit, (s + 1).cast("int")),
-                    (j + 1).cast("int"),
-                ),
-                (t + 1).cast("int"),
-            )
-        ),
-    )
-    dists = F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        lambda s: F.transform(
-            F.sequence(F.lit(0), F.lit(ksub - 1)), lambda j: subdist(s, j)
-        ),
-    )
-    codes = F.transform(
-        dists, lambda d: (F.array_position(d, F.array_min(d)) - 1).cast("int")
-    )
     return assigned.select(
         "vec_id", "list_id", residual.alias("_res")
-    ).select("vec_id", "list_id", codes.alias("codes"))
+    ).select("vec_id", "list_id", _pq_codes(F.col("_res"), books).alias("codes"))
 
 
 def _ivfpq_probe_plan(
@@ -1793,37 +1838,22 @@ def _ivfpq_probe_plan(
     n_probe: int,
     k: int,
     round_dp: int,
-    dsub: int,
 ):
-    """Probe tail shared by one-shot ``ivfpq_topk`` and the persisted
-    index: driver-built per-(query, probed-list) residual LUTs ride in
-    as a 4-D literal, the probe set broadcast-EQUI-joins the codes on
-    ``list_id`` (BroadcastHashJoin; drives partition pruning when
-    ``encoded`` is the hive-partitioned on-disk table), ADC is a LUT
-    fold, one top-k window."""
-    m = len(books)
-    ksub = len(books[0])
-    n_lists = len(cents)
-    dim = len(cents[0])
-    probe_rows = []  # (q_id, qp_idx, list_id) + lut[qp_idx][s][j]
+    """Probe front shared by one-shot ``ivfpq_topk`` and the persisted
+    index: each query ranks the centroids by L2 (lowest list on ties)
+    and keeps ``n_probe``; each (query, probed list) gets a driver-built
+    ``_pq_lut`` over the query's residual, and the probe set
+    broadcast-EQUI-joins the codes on ``list_id`` (BroadcastHashJoin;
+    drives partition pruning when ``encoded`` is the hive-partitioned
+    on-disk table) into the shared ``_pq_adc_rank`` tail."""
+    probe_rows = []  # (q_id, qp, list_id); luts[qp] is that pair's LUT
     luts = []
     for q_id, qv in q_rows:
         ranked = sorted(
-            range(n_lists), key=lambda l: (_py_l2(qv, cents[l]), l)
+            range(len(cents)), key=lambda l: (_py_l2(qv, cents[l]), l)
         )[:n_probe]
         for l in ranked:
-            qres = [qv[t] - cents[l][t] for t in range(dim)]
-            luts.append(
-                [
-                    [
-                        _py_l2(
-                            qres[s * dsub : (s + 1) * dsub], books[s][j]
-                        )
-                        for j in range(ksub)
-                    ]
-                    for s in range(m)
-                ]
-            )
+            luts.append(_pq_lut([x - c for x, c in zip(qv, cents[l])], books))
             probe_rows.append((q_id, len(luts) - 1, l))
     probes = local_table(
         spark,
@@ -1834,35 +1864,8 @@ def _ivfpq_probe_plan(
             "list_id": [l for _, _, l in probe_rows],
         },
     )
-    lut_lit = lit_doubles_3d(luts)
-    adc = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        F.lit(0.0),
-        lambda acc, s: acc
-        + F.element_at(
-            F.element_at(
-                F.element_at(lut_lit, (F.col("qp") + 1).cast("int")),
-                (s + 1).cast("int"),
-            ),
-            (F.element_at(F.col("codes"), (s + 1).cast("int")) + 1).cast("int"),
-        ),
-    )
-    scored = (
-        encoded.join(F.broadcast(probes), "list_id")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(adc, round_dp).alias("adc_dist"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "neighbor_id", "adc_dist", "rank")
+    return _pq_adc_rank(
+        encoded.join(F.broadcast(probes), "list_id"), luts, k=k, round_dp=round_dp
     )
 
 
@@ -1929,8 +1932,8 @@ def ivfpq_topk(
     )
     if len(seed_rows) < seed_n:
         raise ValueError(f"corpus has {len(seed_rows)} rows < {seed_n}")
-    cents, books, dsub = _ivfpq_model(seed_rows, n_lists, m, ksub)
-    encoded = _ivfpq_encode_plan(base, cents, books, m, ksub, dsub)
+    cents, books, _ = _ivfpq_model(seed_rows, n_lists, m, ksub)
+    encoded = _ivfpq_encode_plan(base, cents, books)
     q_rows = [(int(r[0]), [float(x) for x in r[1]]) for r in seed_rows[:n_queries]]
     return _ivfpq_probe_plan(
         embeddings.sparkSession,
@@ -1941,7 +1944,6 @@ def ivfpq_topk(
         n_probe=n_probe,
         k=k,
         round_dp=round_dp,
-        dsub=dsub,
     )
 
 
@@ -1978,7 +1980,7 @@ def build_ivfpq_index(
     if len(seed_rows) < seed_n:
         raise ValueError(f"corpus has {len(seed_rows)} rows < {seed_n}")
     cents, books, dsub = _ivfpq_model(seed_rows, n_lists, m, ksub)
-    encoded = _ivfpq_encode_plan(base, cents, books, m, ksub, dsub)
+    encoded = _ivfpq_encode_plan(base, cents, books)
     queries = base.filter(F.col("vec_id") < max_queries).select(
         F.col("vec_id").alias("q_id"),
         F.col("_emb").cast("array<double>").alias("q_emb"),
@@ -2037,7 +2039,6 @@ def ivfpq_probe_indexed(
         n_probe=n_probe,
         k=k,
         round_dp=round_dp,
-        dsub=meta["dsub"],
     )
 
 
@@ -2064,9 +2065,7 @@ def ivfpq_index_append(
     base = new_embeddings.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_emb")
     )
-    encoded = _ivfpq_encode_plan(
-        base, meta["cents"], meta["books"], meta["m"], meta["ksub"], meta["dsub"]
-    )
+    encoded = _ivfpq_encode_plan(base, meta["cents"], meta["books"])
     indexstore.append(path, (indexstore.IVFPQ_CODES, encoded))
 
 
@@ -2174,37 +2173,10 @@ def pq_reconstruction_mse(
     per sub-space the error IS the winning argmin distance, so MSE =
     avg over vectors of Σ_s min_j ‖v_s − books[s][j]‖² — no explicit
     dequantization pass."""
-    m, ksub, dsub = len(books), len(books[0]), len(books[0][0])
-    books_lit = _pq_books_lit(books)
-    emb = F.col("_emb")
     err = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
+        _pq_subdists(F.col("_emb"), books),
         F.lit(0.0),
-        lambda acc, s: acc
-        + F.array_min(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(ksub - 1)),
-                lambda j: F.aggregate(
-                    F.sequence(F.lit(0), F.lit(dsub - 1)),
-                    F.lit(0.0),
-                    lambda a, t: a
-                    + (
-                        lambda d: d * d  # not F.pow — see pq_encode
-                    )(
-                        F.element_at(emb, (s * dsub + t + 1).cast("int")).cast(
-                            "double"
-                        )
-                        - F.element_at(
-                            F.element_at(
-                                F.element_at(books_lit, (s + 1).cast("int")),
-                                (j + 1).cast("int"),
-                            ),
-                            (t + 1).cast("int"),
-                        )
-                    ),
-                ),
-            )
-        ),
+        lambda acc, d: acc + F.array_min(d),
     )
     row = (
         embeddings.select(F.col(vec_col).alias("_emb"))
@@ -2572,60 +2544,8 @@ def pq_adc_topk_indexed(
             f"{MAX_PANDAS_QUERIES}"
         )
     books = indexstore.read_meta(path, "build_pq_code_table")["books"]
-    m, ksub, dsub = len(books), len(books[0]), len(books[0][0])
-    lut = [
-        [
-            [
-                sum(
-                    (lambda d: d * d)(float(vec[s * dsub + t]) - books[s][j][t])
-                    for t in range(dsub)
-                )
-                for j in range(ksub)
-            ]
-            for s in range(m)
-        ]
-        for _, vec in queries
-    ]
-    lut_lit = lit_doubles_3d(lut)
-    qid_lit = (
-        lit_ints([int(q) for q, _ in queries])
-        if all(-(2**31) <= int(q) <= 2**31 - 1 for q, _ in queries)
-        else lit_longs([int(q) for q, _ in queries])
-    )
     codes = indexstore.read(spark, path, "codes")
-    qi = F.col("_qi")
-    adc = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        F.lit(0.0),
-        lambda acc, s: acc
-        + F.element_at(
-            F.element_at(
-                F.element_at(lut_lit, (qi + 1).cast("int")), (s + 1).cast("int")
-            ),
-            (F.element_at(F.col("codes"), (s + 1).cast("int")) + 1).cast("int"),
-        ),
-    )
-    scored = (
-        codes.select(
-            F.col("vec_id").alias("neighbor_id"),
-            "codes",
-            F.explode(F.sequence(F.lit(0), F.lit(len(queries) - 1))).alias("_qi"),
-        )
-        .select(
-            F.element_at(qid_lit, (qi + 1).cast("int")).alias("q_id"),
-            "neighbor_id",
-            F.round(adc, round_dp).alias("adc_dist"),
-        )
-        .filter(F.col("q_id") != F.col("neighbor_id"))
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "neighbor_id", "adc_dist", "rank")
-    )
+    return _pq_adc_flat(codes, queries, books, k=k, round_dp=round_dp)
 
 
 # --------------------------------------------------------------------------

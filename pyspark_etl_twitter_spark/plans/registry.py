@@ -426,7 +426,6 @@ ORACLES: dict[str, str] = {
     "repetition_stats": T.ORACLE_REPETITION_STATS,
     "quality_gate_by_source": T.ORACLE_QUALITY_GATE_BY_SOURCE,
     "knn_brute_cosine": T.ORACLE_KNN_BRUTE_COSINE,
-    # knn_ann_lsh / knn_ivf: approximate → rows-only
     "embedding_near_dup": T.ORACLE_EMBEDDING_NEAR_DUP,
     "embedding_norm_stats": T.ORACLE_EMBEDDING_NORM_STATS,
     "text_quality_by_source": T.ORACLE_TEXT_QUALITY_BY_SOURCE,
@@ -578,7 +577,7 @@ DRIVER_WINDOW: list[str] = [
     "tpch_q21_waiting_suppliers",
     "weighted_sample_by_length",
     "winsorized_price_stats",
-    # r11 cohort, alphabetically first 31 oracle-backed rows
+    # r11 cohort, alphabetically first 26 oracle-backed rows
     # (bpe_tokens_by_source is rows-only by design and stays in the tail)
     "anti_join_customers",
     "approx_distinct_portable",
@@ -606,11 +605,14 @@ DRIVER_WINDOW: list[str] = [
     "pagerank_suppliers",
     "quality_lr_scores_by_source",
     "quality_lr_weights",
-    "semdedup_ivf_summary",
-    "top_terms_per_doc",
-    "tpch_q10_returned_items",
-    "tpch_q11_important_stock",
-    "tpch_q12_latency_priority",
+    # rule 1: plan-producing code changed since their newest hash (one
+    # ANN body per stage: the IVF append runs the build's assignment, PQ
+    # and IVF-PQ share one ADC tail, both LSH probes one probe)
+    "knn_ann_lsh",
+    "knn_ann_lsh_high_recall",
+    "knn_ivf_rebalanced",
+    "knn_ivfpq_indexed",
+    "knn_pq_indexed",
 ]
 
 _win = set(DRIVER_WINDOW)

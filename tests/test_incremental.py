@@ -323,7 +323,7 @@ def test_ivfpq_index_append_and_streaming_ingest(spark, tmp_path):
 
 def test_ivf_index_append_two_level_matches_exact(spark, tmp_path):
     """ivf_index_append(coarse_probe>=n_coarse) is bit-identical to the
-    exact crossJoin+window append (same fold, same (sim DESC, list_id)
+    exact single-level append (same fold, same (sim DESC, list_id)
     tie rule — the ivf_assignments exhaustive contract applied to the
     append path), and the "auto" default stays exact below the
     break-even threshold."""

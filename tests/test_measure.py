@@ -85,6 +85,7 @@ def test_measure_row_reports_ledger_and_job_list(spark):
     assert rec["jobs"] >= 1
     assert rec["action_s"] > 0
     assert len(rec["job_list"]) == rec["jobs"]
+    assert rec["jobs_per_rep"] == [rec["jobs"]]
 
 
 def test_no_round_numbered_tools():

@@ -59,8 +59,9 @@ def test_window_composition_r15():
     """49 of 50 slots oracle-backed; the ONE sanctioned rows-only slot is
     semdedup_fast_summary — the r10-stale rows-only refresh displaced in
     both r13 and r14, leading the window at last. The other 18 r10-stale
-    rows follow it, then the 31 alphabetically-first oracle-backed r11
-    rows fill the window."""
+    rows follow it, then the 26 alphabetically-first oracle-backed r11
+    rows and the five ANN rows whose plan code changed since their
+    newest hash."""
     window = list(QUERIES)[:WINDOW_SIZE]
     assert set(window) & ROWS_ONLY_BY_DESIGN == {"semdedup_fast_summary"}
     assert all(k in ORACLES for k in window if k != "semdedup_fast_summary")

@@ -1,5 +1,8 @@
 """Similarity search tests: exact top-k vs NumPy oracle; ANN sanity."""
 
+import ast
+from pathlib import Path
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -815,3 +818,87 @@ def test_build_ivf_index_auto_switch(spark, tmp_path):
         emb, big_two, n_lists=k, coarse_probe=IVF_TWO_LEVEL_AUTO_PROBE
     )
     assert assigns(big_auto) == assigns(big_two)
+
+
+@pytest.mark.parametrize("coarse_probe", [None, 16])
+def test_ivf_append_lands_where_the_build_assigns(spark, tmp_path, coarse_probe):
+    """Every appended vector gets the list_id that ``ivf_assignments``
+    gives it over the index's stored centroids: the append runs the
+    build's assignment, exact (None) and two-level exhaustive (16 ≥
+    ⌈√16⌉ coarse groups) alike."""
+    from pyspark.sql import functions as F
+
+    from pyspark_etl_twitter_spark.operators.similarity import (
+        build_ivf_index,
+        ivf_assignments,
+        ivf_index_append,
+    )
+
+    emb = spark.read.parquet(f"{SF_TINY}/embeddings.parquet")
+    batch = emb.filter(F.col("vec_id") >= 400)
+    path = str(tmp_path / "ivf")
+    build_ivf_index(emb.filter(F.col("vec_id") < 400), path, n_lists=16)
+    ivf_index_append(spark, path, batch, coarse_probe=coarse_probe)
+
+    stored = spark.read.parquet(f"{path}/assignments").filter(F.col("vec_id") >= 400)
+    cents = [
+        [float(x) for x in r.c_emb]
+        for r in spark.read.parquet(f"{path}/centroids").orderBy("list_id").collect()
+    ]
+    rebuilt, _ = ivf_assignments(
+        batch, centroid_vectors=cents, coarse_probe=coarse_probe
+    )
+    appended = {(r.vec_id, r.list_id) for r in stored.collect()}
+    assert len(appended) == batch.count() > 0
+    assert appended == {
+        (r.vec_id, r.list_id) for r in rebuilt.select("vec_id", "list_id").collect()
+    }
+
+
+SIMILARITY = (
+    Path(__file__).resolve().parents[1]
+    / "pyspark_etl_twitter_spark"
+    / "operators"
+    / "similarity.py"
+)
+
+
+class _CallSites(ast.NodeVisitor):
+    """The innermost function around every call of a name, and every
+    function holding a ``partitionBy`` over "vec_id"."""
+
+    def __init__(self):
+        self.fn, self.calls, self.vec_id_windows = "<module>", {}, set()
+
+    def visit_FunctionDef(self, node):
+        outer, self.fn = self.fn, node.name
+        self.generic_visit(node)
+        self.fn = outer
+
+    def visit_Call(self, node):
+        func = node.func
+        name = func.attr if isinstance(func, ast.Attribute) else getattr(func, "id", None)
+        self.calls.setdefault(name, set()).add(self.fn)
+        if name == "partitionBy" and any(
+            isinstance(c, ast.Constant) and c.value == "vec_id"
+            for a in node.args
+            for c in ast.walk(a)
+        ):
+            self.vec_id_windows.add(self.fn)
+        self.generic_visit(node)
+
+
+def test_ann_stages_live_in_one_function_each():
+    """One body per ANN stage in similarity.py: no window over vec_id
+    (IVF assignment is the one ``_ivf_assign`` argmax, append included),
+    one ADC scan-and-rank (the only 3-D literal besides the PQ codebook),
+    and one LSH-table helper drawing the hyperplanes."""
+    sites = _CallSites()
+    sites.visit(ast.parse(SIMILARITY.read_text(), filename=str(SIMILARITY)))
+    assert sites.vec_id_windows == set()
+    assert sites.calls["lit_doubles_3d"] == {"_pq_books_lit", "_pq_adc_rank"}
+    assert sites.calls["_hyperplanes"] == {
+        "rp_matrix",
+        "embedding_near_dup_pairs",
+        "_lsh_tables",
+    }

@@ -12,6 +12,8 @@ Each row prints one JSON line:
 - the ``perfbench.harness.spark_ledger`` sums over the timed reps: jobs,
   stages and tasks per rep; executor, shuffle, spill, input and output
   totals; ``driver_gap_s``, the time no Spark job was running;
+- ``jobs_per_rep``: each timed rep's job count, so a change in ``jobs``
+  reads apart from one rep that ran a job more or less;
 - ``job_list``: the jobs of the last timed rep (id, seconds, stages,
   description), read from the status store with the UI off.
 
@@ -142,6 +144,7 @@ def measure_row(spark, name: str, sf_dir: str, warmup: int = 1, reps: int = 3) -
         "action_s": action_s,
         "reps": len(ops),
         **{k.removeprefix("spark."): round(v, 3) for k, v in ledger.items()},
+        "jobs_per_rep": [len(job_list(spark, op)) for op in ops],
         "job_list": job_list(spark, ops[-1]),
     }
 
